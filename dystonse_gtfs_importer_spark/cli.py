@@ -743,12 +743,9 @@ def cmd_monitor(spark, args) -> int:
     at_stop = predictions_for_stop(preds, stop_ids, when, until)
     board = departure_board(at_stop, when, until, all_predictions=preds,
                             with_heat_strip=args.strips)
-    for r in board.collect():
-        if args.strips:
-            print(r.trip_id, r.stop_id, r.t50,
-                  (r.strip_data_url or "")[:48], sep="\t")
-        else:
-            print(r.trip_id, r.stop_id, r.t50, sep="\t")
+    for r in board:
+        strip = [(r.strip_data_url or "")[:48]] if args.strips else []
+        print(r.trip_id, r.stop_id, r.t50, *strip, sep="\t")
     return 0
 
 

@@ -3,19 +3,19 @@ reference's HTTP service (``serve_monitor``/``handle_request``,
 /root/reference/src/monitor/mod.rs:102-190): pretty journey URLs in,
 rendered HTML pages out.
 
-Page data flows through the existing engine plans — the distributed
-part (S8 window reads, F8-F11 board filters, J6 spatial platform
-groups, J8 trip resolution, C13-C15 probability chain) runs as Spark
-queries per request exactly as in ``plans/monitor.py`` /
-``plans/journey.py``; only the O(board size) display rows cross the
-driver boundary, mirroring the reference's per-request MySQL reads.
+Per request, Spark runs the table reads (S8 window, board last stops,
+J6 platform groups, J8 trip resolution) and only O(board size) rows
+cross to the driver, which filters, sorts and scores them, as the
+reference does with its per-request MySQL reads.
 Rendering itself is the pure-stdlib :mod:`monitor_html`.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import logging
 import math
+import time
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -29,6 +29,8 @@ from .plans.monitor import (
 )
 from .rendering import heat_strip_data_url
 from .schemas import EVENT_ARRIVAL, EVENT_DEPARTURE
+
+log = logging.getLogger(__name__)
 
 
 def _utc(epoch_s: int) -> dt.datetime:
@@ -58,6 +60,16 @@ class MonitorApp:
         self.predictions = predictions
         self.radius_m = radius_m
         self.min_chance = 0.05                      # F11
+        # compute_meta_data (mod.rs:1432-1490): headsign and route
+        # name/type of each board row
+        self.headsigns = {
+            (r.trip_id, r.route_id): r.trip_headsign for r in
+            schedule["trips"].select(
+                "trip_id", "route_id", "trip_headsign").collect()}
+        self.route_names = {
+            r.route_id: (r.route_short_name, r.route_type) for r in
+            schedule["routes"].select(
+                "route_id", "route_short_name", "route_type").collect()}
 
     # -- dispatch (handle_request, mod.rs:139-190) -------------------
 
@@ -100,20 +112,6 @@ class MonitorApp:
     def _ok(page: str):
         return 200, "text/html; charset=utf-8", page.encode(), {}
 
-    # -- board metadata ----------------------------------------------
-
-    def _with_meta(self, board: DataFrame) -> DataFrame:
-        """compute_meta_data (mod.rs:1432-1490): headsign + route name
-        and type from the broadcast schedule dimensions."""
-        trips = self.schedule["trips"].select(
-            "trip_id", "route_id", "trip_headsign").dropDuplicates(
-            ["trip_id", "route_id"])
-        routes = self.schedule["routes"].select(
-            "route_id", "route_short_name", "route_type")
-        return (board
-                .join(F.broadcast(trips), ["trip_id", "route_id"], "left")
-                .join(F.broadcast(routes), "route_id", "left"))
-
     # -- stop page (generate_stop_page, mod.rs:426-591) ---------------
 
     def stop_page(self, start_dt: dt.datetime, components: list) -> str:
@@ -148,10 +146,9 @@ class MonitorApp:
 
         preds = predictions_for_stop(
             self.predictions, list(name_by_id), lo_dt, hi_dt)
-        board = departure_board(preds, lo_dt, hi_dt,
-                                all_predictions=self.predictions,
-                                with_heat_strip=True)
-        rows = self._with_meta(board).collect()
+        rows = departure_board(preds, lo_dt, hi_dt,
+                               all_predictions=self.predictions,
+                               with_heat_strip=True)
 
         rows_html: list[str] = []
         # first line: how the traveller arrives here
@@ -194,15 +191,18 @@ class MonitorApp:
             local = cv.transfer_probability(arr_curve, start_ref, c, ref)
             if local < self.min_chance:               # F11
                 continue
+            route_name, route_type = self.route_names.get(
+                r.route_id, (None, None))
             dep = {
                 "scheduled_s": ref,
                 "t01_s": ref + int(cv.x_at_y(c, 0.01)),
                 "t50_s": ref + int(cv.x_at_y(c, 0.50)),
                 "t99_s": ref + int(cv.x_at_y(c, 0.99)),
-                "route_type": r.route_type if r.route_type is not None
+                "route_type": route_type if route_type is not None
                 else -1,
-                "route_name": r.route_short_name or r.route_id,
-                "headsign": r.trip_headsign or "?",
+                "route_name": route_name or r.route_id,
+                "headsign": self.headsigns.get(
+                    (r.trip_id, r.route_id)) or "?",
                 "prob": start_prob * local * 100.0,
                 "origin_type": r.origin_type,
                 "precision_type": r.precision_type,
@@ -324,8 +324,11 @@ def serve_monitor(app: MonitorApp, port: int = 3000, *, threaded=True):
     class Handler(http.server.BaseHTTPRequestHandler):
         def do_GET(self):                         # noqa: N802
             split = urlsplit(self.path)
+            t0 = time.perf_counter()
             status, ctype, body, headers = app.handle(
                 split.path, dict(parse_qsl(split.query)))
+            log.info("%s %s %d %.1f ms", self.command, split.path, status,
+                     1000 * (time.perf_counter() - t0))
             self.send_response(status)
             self.send_header("Content-Type", ctype)
             self.send_header("Content-Length", str(len(body)))
@@ -334,8 +337,8 @@ def serve_monitor(app: MonitorApp, port: int = 3000, *, threaded=True):
             self.end_headers()
             self.wfile.write(body)
 
-        def log_message(self, *a):                # quiet
-            pass
+        def log_message(self, fmt, *args):  # http.server's stderr lines
+            log.debug(fmt, *args)
 
     cls = (http.server.ThreadingHTTPServer if threaded
            else http.server.HTTPServer)

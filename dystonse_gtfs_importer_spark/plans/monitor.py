@@ -3,20 +3,26 @@ departure-board pages — every filter/join/probability computation of
 /root/reference/src/monitor/, minus the HTML.
 
 All predicates are plain column expressions (codegen-friendly); curve
-math goes through the Arrow UDFs in functions.curve_udfs.
+math goes through the Arrow UDFs in functions.curve_udfs, except on the
+departure board, which filters its O(board) rows on the driver.
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
-from pyspark.sql.window import Window
+import math
 
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, Row
+
+from .. import curves as cv
 from ..functions import sql_shared as S
 from ..functions.curve_udfs import (
     convolve_with, curve_x_at_y_expr, transfer_probability, walk_time_curve,
 )
-from ..schemas import ORIGIN_REALTIME, ORIGIN_SCHEDULE
+from ..rendering import heat_strip_data_url
+from ..schemas import (
+    EVENT_DEPARTURE, ORIGIN_REALTIME, ORIGIN_SCHEDULE, PREDICTIONS_PK,
+)
 
 
 def predictions_for_stop(predictions: DataFrame, stop_ids,
@@ -59,100 +65,93 @@ def extended_stops(stops: DataFrame, stop_name: str,
 
 def departure_board(predictions: DataFrame, min_time, max_time,
                     all_predictions: DataFrame | None = None,
-                    with_heat_strip: bool = False) -> DataFrame:
+                    with_heat_strip: bool = False) -> list[Row]:
     """The stop-page pipeline (monitor/mod.rs:426-591): S8 window →
     F8 outlier trim → F9 realtime-over-schedule dedup → F10 last-stop
-    drop → W3 sort by median predicted time.
+    drop → W3 sort by median predicted time (ties by the table key).
 
-    ``predictions`` should already be restricted to the stop group
-    (predictions_for_stop / extended_stops); ``all_predictions`` is
-    the unrestricted table used to find each trip's true final stop
-    (the reference fetches the trip's own predictions for this check,
-    monitor/mod.rs:497-510) — it defaults to ``predictions``.  Curve x
-    values are relative seconds around the scheduled event;
-    ``prediction_min`` anchors the absolute timeline exactly as the
-    reference's TimeCurve ref_time does.
+    As in the reference, which filters its MySQL rows in Rust, Spark
+    runs only the two table reads — the departures in ``predictions``
+    (already restricted to the stop group by predictions_for_stop) and
+    the board vehicles' last ``stop_sequence`` in ``all_predictions``
+    (the unrestricted table, monitor/mod.rs:497-510; defaults to
+    ``predictions``) — and the driver does the rest over O(board) rows,
+    keeping SQL NULL semantics.  ``prediction_min`` anchors the curve's
+    relative seconds as the reference's TimeCurve ref_time does; naive
+    ``min_time``/``max_time`` are local time, as for Spark literals.
+
+    Returns the sorted rows: the input columns plus epoch seconds
+    ``ref_s``/``t05``/``t50``/``t95`` and, with ``with_heat_strip``,
+    ``strip_data_url``.
     """
-    dep = predictions.where(F.col("event_type") == 2)
+    lo, hi = math.floor(min_time.timestamp()), math.floor(max_time.timestamp())
 
-    # absolute epoch of the curve's zero point: prediction_min is
-    # scheduled_time + curve.min_x (make_prediction,
-    # per_schedule_importer.rs:345-346)
-    ref_s = (F.unix_timestamp("prediction_min")
-             - curve_x_at_y_expr(F.col("prediction_curve"), F.lit(0.0)))
-    d = dep.withColumn("ref_s", ref_s)
-    d = d.withColumn(
-        "t05", F.col("ref_s") + curve_x_at_y_expr(F.col("prediction_curve"), F.lit(0.05))
-    ).withColumn(
-        "t50", F.col("ref_s") + curve_x_at_y_expr(F.col("prediction_curve"), F.lit(0.5))
-    ).withColumn(
-        "t95", F.col("ref_s") + curve_x_at_y_expr(F.col("prediction_curve"), F.lit(0.95))
-    )
+    def key(row, cols):                 # a NULL in a join key never matches
+        k = tuple(row[c] for c in cols)
+        return None if None in k else k
 
-    # F8: drop departures certainly outside the window
-    lo, hi = F.unix_timestamp(F.lit(min_time)), F.unix_timestamp(F.lit(max_time))
-    d = d.where((F.col("t05") < hi) & (F.col("t95") > lo))
+    board = []                          # (row dict, curve)
+    for r in predictions.where(F.col("event_type") == EVENT_DEPARTURE
+                               ).collect():
+        if r.prediction_min is None or len(r.prediction_curve or ()) < 2:
+            continue
+        c = cv.Curve.from_points(r.prediction_curve)
+        x0, x05, x50, x95 = cv.x_at_y(c, [0.0, 0.05, 0.5, 0.95]).tolist()
+        # absolute epoch of the curve's zero point: prediction_min is
+        # scheduled_time + curve.min_x (make_prediction,
+        # per_schedule_importer.rs:345-346)
+        ref_s = math.floor(r.prediction_min.timestamp()) - x0
+        row = dict(r.asDict(), ref_s=ref_s, t05=ref_s + x05,
+                   t50=ref_s + x50, t95=ref_s + x95)
+        # F8: drop departures certainly outside the window
+        if row["t05"] < hi and row["t95"] > lo:
+            board.append((row, c))
 
     # F9: drop Schedule rows that have a Realtime twin for the same
-    # (route, start date+time) — left-anti self-join
-    rt_keys = (d.where(F.col("origin_type") == ORIGIN_REALTIME)
-               .select("route_id", "trip_start_date", "trip_start_time")
-               .distinct())
-    sched = d.where(F.col("origin_type") == ORIGIN_SCHEDULE).join(
-        rt_keys, ["route_id", "trip_start_date", "trip_start_time"],
-        "left_anti")
-    d = d.where(F.col("origin_type") != ORIGIN_SCHEDULE).unionByName(sched)
+    # (route, start date+time)
+    twin = ("route_id", "trip_start_date", "trip_start_time")
+    rt_keys = {key(row, twin) for row, _ in board
+               if row["origin_type"] == ORIGIN_REALTIME} - {None}
+    board = [(row, c) for row, c in board if row["origin_type"] is not None
+             and (row["origin_type"] != ORIGIN_SCHEDULE
+                  or key(row, twin) not in rt_keys)]
 
     # F10: drop the trip's final stop (nothing departs from it).  The
-    # per-trip max needs the full table, but only for vehicles on this
-    # board — semi-join first so the aggregate is bounded by the board
-    # size, then let AQE pick the join strategy (an unconditional
-    # broadcast of a full-table aggregate would force an unbounded
-    # driver-side build at scale).
-    vehicle = ["trip_id", "trip_start_date", "trip_start_time"]
-    full = all_predictions if all_predictions is not None else predictions
-    last_stop = (full.join(d.select(*vehicle).distinct(), vehicle, "left_semi")
-                 .groupBy(*vehicle).agg(
-                     F.max("stop_sequence").alias("max_seq")))
-    d = (d.join(last_stop, vehicle, "left")
-         .where(F.col("stop_sequence") < F.col("max_seq"))
-         .drop("max_seq"))
+    # per-vehicle max needs the full table, but only for the vehicles
+    # on this board: the filter keeps the board's trips, dates and
+    # start times (a small superset, matched exactly below), so the
+    # aggregate is bounded by the board size.
+    vehicle = ("trip_id", "trip_start_date", "trip_start_time")
+    keys = {key(row, vehicle) for row, _ in board} - {None}
+    last_seq = {}
+    if keys:
+        full = all_predictions if all_predictions is not None else predictions
+        trips, dates, times = (sorted(set(col)) for col in zip(*keys))
+        last_seq = {key(r, vehicle): r.max_seq for r in (
+            full.where(F.col("trip_id").isin(trips)
+                       & F.col("trip_start_date").isin(dates)
+                       & F.col("trip_start_time").isin(times)
+                       & F.col("stop_sequence").isNotNull())
+            .groupBy(*vehicle)
+            .agg(F.max("stop_sequence").alias("max_seq")).collect())}
+    board = [(row, c) for row, c in board
+             if row["stop_sequence"] is not None and row["stop_sequence"]
+             < last_seq.get(key(row, vehicle), -math.inf)]
+
+    # W3: order by median predicted departure; ties by the table key,
+    # NULLs last
+    ties = PREDICTIONS_PK + ("origin_type", "stop_id")
+    board.sort(key=lambda b: (b[0]["t50"],) + tuple(
+        (b[0][k] is None, b[0][k]) for k in ties))
 
     if with_heat_strip:
         # S19/C22: the per-departure probability strip as a PNG data
         # URL across the board window (generate_png_data_url,
-        # monitor/mod.rs:1214-1262) — an Arrow-batched display column,
-        # rendered executor-side per row
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import StringType
-
-        @pandas_udf(StringType())
-        def strip_url(curve, ref_s, lo_col, hi_col):
-            import pandas as pd
-
-            from .. import curves as cv
-            from ..rendering import heat_strip_data_url
-
-            out = []
-            for pts, r, lo_v, hi_v in zip(curve, ref_s, lo_col, hi_col):
-                if pts is None or len(pts) < 2 or r is None:
-                    out.append(None)
-                    continue
-                c = cv.Curve.from_points(pts)
-                strip = cv.heat_strip(c, float(r), float(lo_v), float(hi_v))
-                out.append(heat_strip_data_url(strip, height=4))
-            return pd.Series(out)
-
-        # the window epochs come from the SAME session-TZ derivation
-        # as ref_s (unix_timestamp), so strip columns line up with the
-        # board's absolute timeline
-        d = d.withColumn(
-            "strip_data_url",
-            strip_url(F.col("prediction_curve"), F.col("ref_s"),
-                      lo.cast("double"), hi.cast("double")))
-
-    # W3: order by median predicted departure
-    return d.orderBy("t50")
+        # monitor/mod.rs:1214-1262)
+        for row, c in board:
+            row["strip_data_url"] = heat_strip_data_url(
+                cv.heat_strip(c, row["ref_s"], lo, hi), height=4)
+    return [Row(**row) for row, _ in board]
 
 
 # Spatial-grid constants for transfer_chances.  Cells must be at least

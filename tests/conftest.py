@@ -21,6 +21,29 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def jobs(spark):
+    """``with jobs() as n:`` — after the block, ``n == [number of Spark
+    jobs the block ran]``, counted through a job group of its own."""
+    import contextlib
+    import uuid
+
+    sc = spark.sparkContext
+    key = "spark.jobGroup.id"
+
+    @contextlib.contextmanager
+    def count():
+        group, out, prev = uuid.uuid4().hex, [], sc.getLocalProperty(key)
+        sc.setLocalProperty(key, group)
+        try:
+            yield out
+        finally:
+            sc.setLocalProperty(key, prev)
+            out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def sf_smoke() -> str:
     return SF_SMOKE

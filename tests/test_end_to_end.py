@@ -113,8 +113,7 @@ class TestEndToEnd:
         window = (dt.datetime(2024, 1, 1, 8, 0),
                   dt.datetime(2024, 1, 1, 12, 0))
         at_stop = predictions_for_stop(preds, stop_ids, *window)
-        board = departure_board(at_stop, *window, all_predictions=preds)
-        rows = board.collect()
+        rows = departure_board(at_stop, *window, all_predictions=preds)
         assert rows, "departure board should show departures"
         t50s = [r.t50 for r in rows]
         assert t50s == sorted(t50s)

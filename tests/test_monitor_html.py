@@ -31,15 +31,16 @@ def _curve(spread_s: float = 60.0):
 
 
 def _pred(stop, seq, event_type, sched_offset_s, spread=60.0,
-          origin=ORIGIN_REALTIME, precision=3):
+          origin=ORIGIN_REALTIME, precision=3, trip=TRIP, route="R1",
+          start_secs=START_SECS):
     t = BASE + dt.timedelta(seconds=sched_offset_s)
     return {
         "source": "test", "event_type": event_type, "stop_id": stop,
         "prediction_min": t - dt.timedelta(seconds=spread),
         "prediction_max": t + dt.timedelta(seconds=spread),
-        "route_id": "R1", "trip_id": TRIP,
+        "route_id": route, "trip_id": trip,
         "trip_start_date": dt.date(2024, 1, 1),
-        "trip_start_time": START_SECS, "stop_sequence": seq,
+        "trip_start_time": start_secs, "stop_sequence": seq,
         "precision_type": precision, "origin_type": origin,
         "sample_size": 50, "prediction_curve": _curve(spread),
         "schedule_file_name": "sched",
@@ -69,6 +70,25 @@ def app(world):
     from dystonse_gtfs_importer_spark.monitor_app import MonitorApp
 
     return MonitorApp(world["sched"], world["preds"])
+
+
+@pytest.fixture(scope="module")
+def busy_app(spark, world):
+    """Five departures from Stop 0 on routes 1 and 2, stored out of
+    time order, each with a later stop so none is a final stop."""
+    from dystonse_gtfs_importer_spark.monitor_app import MonitorApp
+
+    rows = []
+    for n, (route, offset) in enumerate([("R2", 600), ("R1", 60),
+                                         ("R2", 420), ("R1", 780),
+                                         ("R1", 240)]):
+        variant = "v1" if route == "R1" else "v11"
+        trip = dict(trip=f"T{route}{variant}n{n}", route=route,
+                    start_secs=START_SECS + offset)
+        rows += [_pred("S1", 1, 2, offset, **trip),
+                 _pred("S9", 2, 1, offset + 600, **trip)]
+    return MonitorApp(world["sched"], spark.createDataFrame(
+        rows, PREDICTIONS).cache())
 
 
 TRIP_DESC = {"route_type": 3, "route_short_name": "1",
@@ -220,6 +240,23 @@ class TestStopPage:
         # extended platforms S0/S1/S2 carry two distinct names
         assert "extended_stops" in page
 
+    def test_departures_in_median_time_order(self, busy_app):
+        """W3: the board lists departures by median time, whatever
+        order the predictions table holds them in."""
+        page = busy_app.stop_page(START_DT, ["Stop 0"])
+        assert _audit(page).outers == 5
+        assert "Head R1" in page and "Head R2" in page
+        t50s = re.findall(r'title="Vermutlich (\d\d:\d\d:\d\d)"', page)
+        assert len(t50s) == 5
+        assert t50s == sorted(t50s)
+
+    def test_spark_jobs_per_stop_page(self, busy_app, jobs):
+        """The board runs only the S8 read and the last-stop aggregate
+        in Spark; the whole page stays within six jobs."""
+        with jobs() as n:
+            busy_app.stop_page(START_DT, ["Stop 0"])
+        assert 0 < n[0] <= 6
+
     def test_full_journey_walk_first_line(self, app):
         page = app.stop_page(START_DT, [
             "Stop 0", TRIP_DESC, "Stop 1", "walk", "Stop 2"])
@@ -280,6 +317,35 @@ class TestDispatch:
         status, _, body, _ = app.handle(
             H.journey_url(START_DT, ["No Such Stop"]))
         assert status == 500 and b"Fehler 500" in body
+
+    def test_access_log(self, app, caplog):
+        """serve_monitor logs one line per request: method, path,
+        status and latency."""
+        import http.client
+        import logging
+        import threading
+
+        from dystonse_gtfs_importer_spark.monitor_app import serve_monitor
+
+        caplog.set_level(logging.INFO,
+                         logger="dystonse_gtfs_importer_spark.monitor_app")
+        srv = serve_monitor(app, port=0)
+        threading.Thread(target=srv.serve_forever, daemon=True).start()
+        try:
+            for path in ("/style.css", "/stop-by-name?start=Stop+0"):
+                conn = http.client.HTTPConnection(
+                    "127.0.0.1", srv.server_address[1], timeout=30)
+                conn.request("GET", path)
+                conn.getresponse().read()
+                conn.close()
+        finally:
+            srv.shutdown()
+            srv.server_close()
+        lines = [r.getMessage() for r in caplog.records
+                 if r.name == "dystonse_gtfs_importer_spark.monitor_app"]
+        assert len(lines) == 2
+        assert re.fullmatch(r"GET /style\.css 200 \d+\.\d ms", lines[0])
+        assert re.fullmatch(r"GET /stop-by-name 302 \d+\.\d ms", lines[1])
 
     def test_concurrent_requests(self, app):
         """ThreadingHTTPServer + concurrent Spark actions per request

@@ -81,14 +81,13 @@ w = (dt.datetime(2024,1,1,8,0), dt.datetime(2024,1,1,12,0))
 stops_here = [r.stop_id for r in live.select("stop_id").distinct().limit(4).collect()]
 board = departure_board(predictions_for_stop(allpreds, stops_here, *w), *w,
                         all_predictions=allpreds)
-rows = board.select("trip_id","stop_id","origin_type","t50").collect()
-print("5) board rows:", len(rows), "sorted:", [r.t50 for r in rows] == sorted(r.t50 for r in rows))
+print("5) board rows:", len(board), "sorted:", [r.t50 for r in board] == sorted(r.t50 for r in board))
 tc = transfer_chances(allpreds.where(F.col("event_type")==1).limit(20),
                       allpreds.where(F.col("event_type")==2).limit(50), sched["stops"],
                       min_probability=0.0)
 print("6) transfer chances:", tc.count())
-empty = departure_board(predictions_for_stop(allpreds, ["NO_SUCH_STOP"], *w), *w,
-                        all_predictions=allpreds).count()
+empty = len(departure_board(predictions_for_stop(allpreds, ["NO_SUCH_STOP"], *w), *w,
+                            all_predictions=allpreds))
 print("7) probe unknown stop -> board rows:", empty)
 print("8) autocomplete:", [r.stop_name for r in autocomplete_stops(sched["stops"], "stop 1").limit(3).collect()])
 
