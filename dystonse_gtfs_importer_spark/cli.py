@@ -387,6 +387,23 @@ def _read_stats(spark, args):
     return read_curve_tables(spark, str(Path(args.dir) / "stats"))
 
 
+def _append_predictions(preds, path: str) -> int:
+    """Append ``preds`` to the predictions table and return how many
+    rows it wrote, counted by an Observation on the write's own job
+    instead of a second pass over the prediction plan."""
+    from pyspark.sql import Observation
+
+    from .sources.store import write_predictions
+
+    obs = Observation()
+    write_predictions(preds.observe(obs, F.count(F.lit(1)).alias("rows")),
+                      path, mode="append")
+    # a write of no rows completes the observation with an empty row,
+    # which Observation.get cannot convert
+    row = obs._jo.getRow()
+    return row.getLong(0) if row.length() else 0
+
+
 def cmd_import(spark, args) -> int:
     from .plans.import_etl import build_records, latest_wins_merge
     from .sources.gtfs_rt import read_gtfs_rt
@@ -441,7 +458,6 @@ def cmd_import(spark, args) -> int:
             predict, prediction_lookups, prediction_rows, realtime_basis,
         )
         from .schemas import ORIGIN_REALTIME
-        from .sources.store import write_predictions
 
         tables = _read_stats(spark, args)
         records = _read_records(spark, args)
@@ -454,9 +470,8 @@ def cmd_import(spark, args) -> int:
             .where(F.col("prediction_curve").isNotNull())
         preds = prediction_rows(predicted, args.source, sched_name,
                                 ORIGIN_REALTIME)
-        write_predictions(preds, str(Path(args.dir) / "predictions"),
-                          mode="append")
-        _say(args, f"wrote {preds.count()} prediction rows")
+        n = _append_predictions(preds, str(Path(args.dir) / "predictions"))
+        _say(args, f"wrote {n} prediction rows")
 
     if args.cleanup:
         from .streaming.import_stream import (
@@ -657,7 +672,6 @@ def cmd_predict(spark, args) -> int:
 
     if args.pmode == "start":
         from .plans.scheduled import scheduled_predictions
-        from .sources.store import write_predictions
 
         now = (dt.datetime.fromisoformat(args.now) if args.now
                else dt.datetime.now())
@@ -668,8 +682,8 @@ def cmd_predict(spark, args) -> int:
                                       existing_predictions=existing,
                                       source=args.source,
                                       schedule_file_name=sched_name)
-        write_predictions(preds, str(pdir), mode="append")
-        print(f"wrote {preds.count()} scheduled prediction rows")
+        n = _append_predictions(preds, str(pdir))
+        print(f"wrote {n} scheduled prediction rows")
         return 0
 
     # single lookup (predictor/mod.rs:33-87)

@@ -11,15 +11,9 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    ArrayType, DoubleType, FloatType, LongType, StructField, StructType,
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from .. import curves as cv
-
-CURVE_TYPE = ArrayType(StructType([
-    StructField("x", FloatType()), StructField("y", FloatType()),
-]))
 
 
 def ecdf_curve_points(df: DataFrame, group_cols: list[str], value_col: str,
@@ -33,7 +27,8 @@ def ecdf_curve_points(df: DataFrame, group_cols: list[str], value_col: str,
     weight / total over distinct values), which is what the DuckDB
     oracle checks; ``y_round`` rounds y so cross-engine summation-order
     drift of fractional weights stays out of the value hash.  The
-    array-typed variant for storage is :func:`curve_table`.
+    curve tables' array-typed form is built over counted bases in
+    plans/analyse_gtfs.py.
     """
     # Prune BEFORE the groupBy shuffle: the kernel reads only the keys
     # and the value column, so everything else (at scale, most of the
@@ -69,172 +64,30 @@ def ecdf_curve_points(df: DataFrame, group_cols: list[str], value_col: str,
     return df.groupBy(*group_cols).applyInPandas(build, out_schema)
 
 
-def ecdf_curve_points_counted(df: DataFrame, group_cols: list[str],
-                              value_col: str, min_samples: int = 2,
-                              focus: float | None = None,
-                              y_round: int | None = None) -> DataFrame:
-    """Scale form of :func:`ecdf_curve_points`: pre-aggregate to one
-    row per distinct (group, value) with a JVM-side count (partial agg
-    below the Exchange = map-side combine), then run the kernel over
-    multiplicities via ``make_curve_counted``.
-
-    Shuffle volume into the pandas kernel becomes the number of
-    *distinct* values per group instead of the number of observations
-    — for 12 s-rounded delays bounded by ±3000 s that is ≤ 500 rows
-    per group regardless of record volume.  Bit-exact vs the per-row
-    form for unfocused weights (integer counts); focused weights can
-    drift by an ulp in summation order, so pair with ``y_round``.
-    """
-    import pyspark.sql.functions as F
-
-    # match the per-row form's pandas dropna(): NULL *and* NaN vanish
-    v = F.col(value_col).cast("double")
-    counted = (df.select(*group_cols, value_col)
-               .where(v.isNotNull() & ~F.isnan(v))
-               .groupBy(*group_cols, value_col)
-               .agg(F.count("*").alias("cnt")))
-    fields = [counted.schema[c] for c in group_cols]
-    out_schema = StructType(fields + [
-        StructField("x", DoubleType()),
-        StructField("y", DoubleType()),
-        StructField("sample_size", LongType()),
-    ])
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({f.name: pd.Series(dtype="object")
-                              for f in out_schema.fields})
-        n = int(pdf["cnt"].sum())
-        if n < min_samples:
-            return empty
-        made = cv.make_curve_counted(
-            pdf[value_col].to_numpy("float64"),
-            pdf["cnt"].to_numpy("float64"), focus)
-        if made is None:
-            return empty
-        curve, _total = made
-        k = len(curve)
-        out = {c: [pdf[c].iloc[0]] * k for c in group_cols}
-        out["x"] = curve.xs
-        ys = curve.ys
-        if y_round is not None:
-            import numpy as np
-
-            ys = np.round(ys, y_round)
-        out["y"] = ys
-        out["sample_size"] = [n] * k
-        return pd.DataFrame(out)
-
-    return counted.groupBy(*group_cols).applyInPandas(build, out_schema)
-
-
-def ecdf_curve_points_jvm(df: DataFrame, group_cols: list[str],
-                          value_col: str, min_samples: int = 2,
-                          focus: float | None = None,
-                          y_round: int | None = None) -> DataFrame:
-    """Pure-JVM twin of :func:`ecdf_curve_points`: the A3 ``make_curve``
-    semantics (curve_utils.rs:65-94 quirks included) expressed entirely
-    as DataFrame ops — counted distinct values, then a per-group window
-    cumsum — with **no Python in the plan**: every stage is whole-stage
-    codegen, no Arrow transfer, no pandas kernel.
-
-    Shape: one (group, value) hash aggregate (partial below the
-    exchange), then windows over ≤ |distinct values| rows per group —
-    at 12 s-rounded ±3000 s delays that is ≤ 501 rows per group
-    regardless of record volume.  Equality vs the pandas kernel is
-    pinned by tests; the kernel remains the reference implementation
-    (and the only path for curve-*array* outputs / simplify).
-
-    Semantics mirrored exactly: duplicate x keeps the cumulative
-    weight of its first occurrence; an x == 0.0 at the group minimum
-    emits no point; first/last surviving y forced to 0.0 / 1.0; groups
-    with < ``min_samples`` values or < 2 surviving points vanish.
-    """
-    import pyspark.sql.functions as F
-    from pyspark.sql.window import Window
-
-    g = list(group_cols)
-    part = Window.partitionBy(*g)
-    ordered = part.orderBy("x").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-
-    # NULL *and* NaN dropped, matching the pandas kernel's dropna()
-    v = (df.select(*g, F.col(value_col).cast("double").alias("x"))
-         .where(F.col("x").isNotNull() & ~F.isnan("x")))
-    counted = v.groupBy(*g, "x").agg(F.count("*").alias("cnt"))
-
-    if focus is None:
-        w = F.lit(1.0)
-    else:
-        # triangular kernel (C6 get_weight): 1.0 at focus, linear to 0
-        # at the group min/max; spans of zero width degenerate to 1/0
-        # exactly as the NumPy mirror does
-        mn_g = F.min("x").over(part)
-        mx_g = F.max("x").over(part)
-        fc = F.lit(float(focus))
-        below = F.when(fc - mn_g != 0.0,
-                       (F.col("x") - mn_g) / (fc - mn_g)).otherwise(F.lit(1.0))
-        above = F.when(mx_g - fc != 0.0,
-                       1.0 - (F.col("x") - fc) / (mx_g - fc)).otherwise(
-            F.lit(0.0))
-        w = (F.when(F.col("x") == fc, 1.0)
-             .when(F.col("x") < fc, below).otherwise(above))
-
-    cum = (counted
-           .withColumn("__w", w)
-           .withColumn("__wc", F.col("__w") * F.col("cnt"))
-           .withColumn("__raw_min", F.min("x").over(part))
-           .withColumn("n", F.sum("cnt").over(part))
-           .withColumn("total", F.sum("__wc").over(part))
-           # post-filter stats derived pre-filter: the x==0-at-minimum
-           # rule removes at most the single counted x==0.0 row, and
-           # only when the group minimum IS 0.0 (x values are distinct
-           # per group after the count aggregate) — so the surviving
-           # min/count follow from the raw stats without a second
-           # window pass over the filtered rows
-           .withColumn("__min_nz",
-                       F.min(F.when(F.col("x") != 0.0, F.col("x")))
-                       .over(part))
-           .withColumn("__k_pre", F.count("*").over(part))
-           # the removable row is the group MINIMUM, so the max is
-           # the raw max either way
-           .withColumn("__mx", F.max("x").over(part))
-           .withColumn("cum_first",
-                       F.sum("__wc").over(ordered) - F.col("__wc")
-                       + F.col("__w")))
-    filtered = cum.where(
-        ~((F.col("x") == 0.0) & (F.col("x") == F.col("__raw_min"))))
-    zero_is_min = F.col("__raw_min") == 0.0
-    filtered = (filtered
-                .withColumn("__mn", F.when(zero_is_min, F.col("__min_nz"))
-                            .otherwise(F.col("__raw_min")))
-                .withColumn("__k", F.col("__k_pre")
-                            - F.when(zero_is_min, 1).otherwise(0)))
-    y = (F.when(F.col("x") == F.col("__mn"), 0.0)
-         .when(F.col("x") == F.col("__mx"), 1.0)
-         .otherwise(F.least(F.lit(1.0), F.greatest(
-             F.lit(0.0), F.col("cum_first") / F.col("total")))))
-    if y_round is not None:
-        y = F.round(y, y_round)
-    return (filtered
-            .where((F.col("n") >= min_samples) & (F.col("__k") >= 2)
-                   & (F.col("total") > 0))
-            .select(*g, "x", y.alias("y"),
-                    F.col("n").cast("long").alias("sample_size")))
-
-
 def ecdf_curve_points_jvm_sql(src: str, group_cols: list[str],
                               value_col: str, min_samples: int = 2,
                               focus: float | None = None,
                               y_round: int | None = None,
                               pre_partition: bool = False) -> str:
-    """:func:`ecdf_curve_points_jvm` rendered as ONE Spark-SQL string
-    over the registered view ``src`` — expression-for-expression the
-    same plan, but built in a single ``spark.sql`` call.  The Column
-    form costs ~1.4 s of py4j round-trips just CONSTRUCTING its tree
-    at bench scale (measured round 4: build 1.43 s, execute 0.8 s
-    warm); SQL parsing happens JVM-side in one hop, so the registry
-    and bench run this rendering while the Column form remains the
-    composable API (equality pinned by test).
+    """Pure-JVM twin of :func:`ecdf_curve_points`, rendered as ONE
+    Spark-SQL string over the registered view ``src``: the A3
+    ``make_curve`` semantics (curve_utils.rs:65-94 quirks included) as
+    counted distinct values plus a per-group window cumsum, with **no
+    Python in the plan** — no Arrow transfer, no pandas kernel.  One
+    ``spark.sql`` call parses the whole plan JVM-side; building the
+    same tree from DataFrame Columns cost ~1.4 s of py4j round-trips
+    at bench scale (measured round 4).
+
+    Shape: one (group, value) hash aggregate (partial below the
+    exchange), then windows over ≤ |distinct values| rows per group —
+    at 12 s-rounded ±3000 s delays that is ≤ 501 rows per group
+    regardless of record volume.  Equality vs the pandas kernel is
+    pinned by tests.
+
+    Semantics mirrored exactly: duplicate x keeps the cumulative
+    weight of its first occurrence; an x == 0.0 at the group minimum
+    emits no point; first/last surviving y forced to 0.0 / 1.0; groups
+    with < ``min_samples`` values or < 2 surviving points vanish.
 
     ``pre_partition``: repartition the raw values by the GROUP key
     before the (group, x) aggregation.  Hash partitioning by a subset
@@ -333,38 +186,3 @@ def ecdf_curve_points_jvm_sql(src: str, group_cols: list[str],
         FROM surviving
         WHERE n >= {min_samples} AND __k >= 2 AND total > 0
     """
-
-
-def curve_table(df: DataFrame, group_cols: list[str], value_col: str,
-                min_samples: int = 20, simplify_eps: float | None = 0.01,
-                focus_col: str | None = None) -> DataFrame:
-    """A3+A4: one curve *row* per group with an array<struct<x,y>>
-    column — the storage form for general_delay / default_curves
-    tables (min-sample gate F13 applied inside the kernel)."""
-    keep = list(group_cols) + [value_col] + ([focus_col] if focus_col else [])
-    df = df.select(*keep)  # shuffle only what the kernel reads
-    fields = [df.schema[c] for c in group_cols]
-    out_schema = StructType(fields + [
-        StructField("curve", CURVE_TYPE),
-        StructField("sample_size", LongType()),
-    ])
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf[value_col].dropna().to_numpy(dtype="float64")
-        if len(vals) < min_samples:
-            return pd.DataFrame({f.name: pd.Series(dtype="object")
-                                 for f in out_schema.fields})
-        focus = float(pdf[focus_col].iloc[0]) if focus_col else None
-        made = cv.make_curve(vals, focus)
-        if made is None:
-            return pd.DataFrame({f.name: pd.Series(dtype="object")
-                                 for f in out_schema.fields})
-        curve, _ = made
-        if simplify_eps is not None:
-            curve = cv.simplify(curve, simplify_eps)
-        row = {c: pdf[c].iloc[0] for c in group_cols}
-        row["curve"] = curve.points()
-        row["sample_size"] = len(vals)
-        return pd.DataFrame([row])
-
-    return df.groupBy(*group_cols).applyInPandas(build, out_schema)

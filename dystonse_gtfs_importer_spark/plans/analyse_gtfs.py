@@ -30,14 +30,16 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    ByteType, DoubleType, FloatType, IntegerType, LongType, StringType,
-    StructField, StructType,
+    ByteType, FloatType, LongType, StructField, StructType,
 )
 from pyspark.sql.window import Window
 
 from .. import curves as cv
 from ..functions import sql_shared as S
-from ..schemas import CURVE_TYPE
+from ..schemas import (
+    CURVE_TYPE, PRECISION_FALLBACK_GENERAL, PRECISION_GENERAL,
+    PRECISION_SUPER_GENERAL,
+)
 
 DELAY_LIMIT = 3000          # F2: strict bound for curve inputs
 MIN_ROWS_GENERAL = 20       # F13: general_delay gate
@@ -174,6 +176,25 @@ def general_delay_counted(items: DataFrame) -> DataFrame:
         F.count("*").alias("cnt"))
 
 
+def _counted_curve(pdf: pd.DataFrame, min_rows: int):
+    """The shared curve kernel over a (delay, cnt) basis group:
+    ``(simplify(make_curve_counted, 0.01), n)``, or None when the group
+    has fewer than ``min_rows`` values or no curve (F13 gate)."""
+    n = int(pdf["cnt"].sum())
+    if n < min_rows:
+        return None
+    made = cv.make_curve_counted(pdf["delay"].to_numpy("float64"),
+                                 pdf["cnt"].to_numpy("float64"))
+    if made is None:
+        return None
+    return cv.simplify(made[0], 0.01), n
+
+
+def _empty(schema: StructType) -> pd.DataFrame:
+    return pd.DataFrame({f.name: pd.Series(dtype="object")
+                         for f in schema.fields})
+
+
 def general_curves_from_counted(counted: DataFrame) -> DataFrame:
     """Derive the general curve table from its (delay, cnt) basis."""
     keys = GENERAL_KEYS
@@ -184,19 +205,12 @@ def general_curves_from_counted(counted: DataFrame) -> DataFrame:
         ])
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = int(pdf["cnt"].sum())
-        empty = pd.DataFrame({f.name: pd.Series(dtype="object")
-                              for f in out_schema.fields})
-        if n < MIN_ROWS_GENERAL:
-            return empty
-        made = cv.make_curve_counted(pdf["delay"].to_numpy("float64"),
-                                     pdf["cnt"].to_numpy("float64"))
+        made = _counted_curve(pdf, MIN_ROWS_GENERAL)
         if made is None:
-            return empty
-        curve = cv.simplify(made[0], 0.01)
+            return _empty(out_schema)
         row = {k: pdf[k].iloc[0] for k in keys}
-        row["curve"] = curve.points()
-        row["sample_size"] = n
+        row["curve"] = made[0].points()
+        row["sample_size"] = made[1]
         return pd.DataFrame([row])
 
     return counted.groupBy(*keys).applyInPandas(build, out_schema)
@@ -285,17 +299,15 @@ def stop_pair_curves_from_counted(counted: DataFrame) -> DataFrame:
         ])
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({f.name: pd.Series(dtype="object")
-                              for f in out_schema.fields})
         n = int(pdf["cnt"].sum())
         if n < MIN_PAIRS_SPECIFIC:
-            return empty
+            return _empty(out_schema)
         reps = pdf["cnt"].to_numpy(dtype="int64")
         res = cv.stop_pair_curve_set(np.column_stack([
             np.repeat(pdf["d_start"].to_numpy(dtype="float64"), reps),
             np.repeat(pdf["d_end"].to_numpy(dtype="float64"), reps)]))
         if res is None:
-            return empty
+            return _empty(out_schema)
         rows = []
         for focus, curve in res["curves"]:
             row = {k: pdf[k].iloc[0] for k in keys}
@@ -333,6 +345,35 @@ def default_leaf_counted(items: DataFrame, routes: DataFrame) -> DataFrame:
         F.count("*").alias("cnt"))
 
 
+DEFAULT_DIMS = ["route_type", "route_section", "time_slot", "event_type"]
+
+
+def _nulls_last(values) -> list:
+    return [(v is None, v) for v in values]
+
+
+def _average_rows(rows: list, keys: list[str], precision: int) -> list[dict]:
+    """One ladder rung: per ``keys`` group (sorted key order), the
+    pointwise average of the rows' curves, each read back through the
+    stored float32 points; sample_size is the int of the inputs' mean
+    (curve_data.rs:21-42)."""
+    groups: dict[tuple, list] = {}
+    for r in rows:
+        groups.setdefault(tuple(r[k] for k in keys), []).append(r)
+    out = []
+    for key in sorted(groups, key=_nulls_last):
+        grp = groups[key]
+        avg = cv.average_curves([cv.Curve.from_points(r["curve"])
+                                 for r in grp])
+        row = dict.fromkeys(DEFAULT_DIMS)
+        row.update(zip(keys, key))
+        row["curve"] = avg.points()
+        row["sample_size"] = int(np.mean([r["sample_size"] for r in grp]))
+        row["precision_type"] = precision
+        out.append(row)
+    return out
+
+
 def default_curves_from_counted(counted: DataFrame) -> DataFrame:
     """The hierarchical default-curve rollup
     (/root/reference/src/analyser/default_curves.rs:42-248):
@@ -345,75 +386,46 @@ def default_curves_from_counted(counted: DataFrame) -> DataFrame:
        type's General curves;
     4. SuperGeneral per event_type: average of everything.
 
+    Steps 1–2 are ONE grouped pass keyed by the General keys: leaves
+    carry ``route_variant``, which grows with the data, so they stay in
+    Spark.  Steps 3–4 run on the driver over the collected General
+    rows — at most route types × 3 sections × 13 slots × 2 event types.
+    Every rung is :func:`_average_rows` over inputs in sorted key order.
+
     Output: one table with nullable dimension columns — the Spark
     grouping-sets shape of the reference's fallback ladder.
     """
-    leaf_keys = LEAF_KEYS
-    leaf_schema = StructType(
-        [counted.schema[k] for k in leaf_keys] + [
+    dims = DEFAULT_DIMS
+    # event_type is the one dimension every rung keeps
+    schema = StructType(
+        [StructField(k, counted.schema[k].dataType) for k in dims[:3]] + [
+            counted.schema["event_type"],
             StructField("curve", CURVE_TYPE),
             StructField("sample_size", LongType()),
+            StructField("precision_type", ByteType()),
         ])
 
-    def build_leaf(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = int(pdf["cnt"].sum())
-        empty = pd.DataFrame({f.name: pd.Series(dtype="object")
-                              for f in leaf_schema.fields})
-        if n < MIN_ROWS_DEFAULT:
-            return empty
-        made = cv.make_curve_counted(pdf["delay"].to_numpy("float64"),
-                                     pdf["cnt"].to_numpy("float64"))
-        if made is None:
-            return empty
-        row = {k: pdf[k].iloc[0] for k in leaf_keys}
-        row["curve"] = cv.simplify(made[0], 0.01).points()
-        row["sample_size"] = n
-        return pd.DataFrame([row])
+    def build_general(pdf: pd.DataFrame) -> pd.DataFrame:
+        leaves = []
+        for _, leaf in pdf.groupby("route_variant", sort=True, dropna=False):
+            made = _counted_curve(leaf, MIN_ROWS_DEFAULT)
+            if made is not None:
+                leaves.append({**{k: leaf[k].iloc[0] for k in dims},
+                               "curve": made[0].points(),
+                               "sample_size": made[1]})
+        return pd.DataFrame(_average_rows(leaves, dims, PRECISION_GENERAL),
+                            columns=schema.fieldNames())
 
-    leaves = counted.groupBy(*leaf_keys).applyInPandas(build_leaf, leaf_schema)
-
-    def avg_level(df: DataFrame, keys: list[str], precision: int) -> DataFrame:
-        schema = StructType(
-            [leaves.schema[k] for k in keys] + [
-                StructField("curve", CURVE_TYPE),
-                StructField("sample_size", LongType()),
-                StructField("precision_type", ByteType()),
-            ])
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            curves = [cv.Curve.from_points(p) for p in pdf["curve"]]
-            avg = cv.average_curves(curves)
-            row = {k: pdf[k].iloc[0] for k in keys}
-            row["curve"] = avg.points()
-            # reference: sample_size = mean of inputs (curve_data.rs:21-42)
-            row["sample_size"] = int(pdf["sample_size"].mean())
-            row["precision_type"] = precision
-            return pd.DataFrame([row])
-
-        return df.groupBy(*keys).applyInPandas(build, schema)
-
-    from ..schemas import (
-        PRECISION_FALLBACK_GENERAL, PRECISION_GENERAL, PRECISION_SUPER_GENERAL,
-    )
-
-    general = avg_level(
-        leaves, ["route_type", "route_section", "time_slot", "event_type"],
-        PRECISION_GENERAL)
-    fallback = avg_level(
-        general, ["route_type", "event_type"], PRECISION_FALLBACK_GENERAL)
-    supergeneral = avg_level(fallback, ["event_type"], PRECISION_SUPER_GENERAL)
-
-    dims = ["route_type", "route_section", "time_slot", "event_type"]
-
-    def pad(df: DataFrame) -> DataFrame:
-        out = df
-        for c in dims:
-            if c not in df.columns:
-                dt = general.schema[c].dataType
-                out = out.withColumn(c, F.lit(None).cast(dt))
-        return out.select(*dims, "curve", "sample_size", "precision_type")
-
-    return pad(general).unionByName(pad(fallback)).unionByName(pad(supergeneral))
+    general = [r.asDict() for r in counted.groupBy(*dims)
+               .applyInPandas(build_general, schema).collect()]
+    general.sort(key=lambda r: _nulls_last(r[k] for k in dims))
+    fallback = _average_rows(general, ["route_type", "event_type"],
+                             PRECISION_FALLBACK_GENERAL)
+    supergeneral = _average_rows(fallback, ["event_type"],
+                                 PRECISION_SUPER_GENERAL)
+    return counted.sparkSession.createDataFrame(
+        [[r[c] for c in schema.fieldNames()]
+         for r in general + fallback + supergeneral], schema)
 
 
 def default_curves(items: DataFrame, routes: DataFrame) -> DataFrame:

@@ -1800,13 +1800,10 @@ def q_fingerprint_dedup(d: S.Dialect) -> str:
 
 def _ecdf_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pruned per-row form: a 2-column Project feeds the single
-    Exchange into the pandas kernel (plan-pinned).  The counted twin
-    ``ecdf_curve_points_counted`` — distinct-values-only shuffle via a
-    JVM-side partial aggregate, bit-identical output (equality-tested)
-    — is the 100 TB shape, but its two extra aggregate stages cost
-    ~2 s of codegen/scheduling at local scale, so the single-shuffle
-    form is the bench entry; the GTFS production curves already
-    pre-count (plans/analyse_gtfs.py general_delay_counted)."""
+    Exchange into the pandas kernel (plan-pinned).  The GTFS
+    production curves run the counted scale shape instead: a
+    distinct-values-only shuffle into ``make_curve_counted``
+    (plans/analyse_gtfs.py general_delay_counted)."""
     from ..session import configure_for_oracle
     from ..sources.testdata import load_table
     from .analyse import ecdf_curve_points
@@ -1818,15 +1815,13 @@ def _ecdf_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ecdf_jvm_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Third derivation of A3: :func:`plans.analyse.ecdf_curve_points_jvm`
-    — make_curve expressed entirely as JVM DataFrame ops (counted
-    values + window cumsum, zero Python in the plan).  Hash-matched
-    against the same DuckDB oracle as the pandas kernel, so kernel,
-    counted kernel, and JVM forms are mutually proven equal; this is
-    the form a cluster without Python workers (or with Arrow transfer
-    as the bottleneck) would run.  Runs the one-call SQL rendering of
-    the same plan — building the Column tree costs ~1.4 s of py4j
-    round-trips that SQL parsing doesn't (analyse.py docstring)."""
+    """Second derivation of A3:
+    :func:`plans.analyse.ecdf_curve_points_jvm_sql` — make_curve
+    expressed entirely as JVM SQL (counted values + window cumsum,
+    zero Python in the plan).  Hash-matched against the same DuckDB
+    oracle as the pandas kernel, so the two forms are mutually proven
+    equal; this is the form a cluster without Python workers (or with
+    Arrow transfer as the bottleneck) would run."""
     from ..session import configure_for_oracle
     from .analyse import ecdf_curve_points_jvm_sql
 

@@ -63,9 +63,7 @@ def _dedup_basis_batch(df: pd.DataFrame, last: tuple | None,
     dropped row's basis EQUALS the carried state, so the carried state
     is always the previous row's basis
     (per_schedule_importer.rs:266-313); null-safe equality treats
-    (NaN == NaN) as a match.  Returns (kept rows, new carried basis).
-    Used by BOTH state-API shells below, so the classic operator's
-    tests exercise this body for the transformWithState twin too."""
+    (NaN == NaN) as a match.  Returns (kept rows, new carried basis)."""
     df = df.sort_values(["header_timestamp", "stop_sequence"],
                         ignore_index=True)
     ss, dd = df["stop_sequence"], df["departure_delay"]
@@ -115,64 +113,6 @@ def dedup_prediction_basis(events: DataFrame,
             stateStructType=state_schema,
             outputMode="append",
             timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
-
-
-def dedup_prediction_basis_tws(events: DataFrame,
-                               ttl_hours: int = 12) -> DataFrame:
-    """ST2 on the Spark 4 state API: the same per-vehicle basis dedup
-    expressed as a ``transformWithStateInPandas`` StatefulProcessor
-    with a TTL'd ValueState — state expiry is declarative
-    (``ttlDurationMs``) instead of the manual timeout dance of
-    :func:`dedup_prediction_basis`.  Output is identical (tested); the
-    classic operator remains the default for engines without the new
-    API.  At scale the state store behavior matches: one ValueState
-    row per live vehicle, dropped by the store itself after the TTL
-    (MAX_ESTIMATED_TRIP_DURATION, importer/mod.rs:27).
-
-    Runtime requirements (checked lazily, not at import): the
-    ``protobuf`` package (the transformWithState Python worker speaks
-    a protobuf state protocol) and the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``).  Where either
-    is missing — as in this build container — use
-    :func:`dedup_prediction_basis`; the test suite skips accordingly.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle,
-    )
-
-    cols = [f.name for f in RT_EVENTS.fields]
-    ttl_ms = ttl_hours * 3600 * 1000
-
-    class BasisDedup(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._basis = handle.getValueState(
-                "basis", "stop_sequence int, departure_delay int",
-                ttlDurationMs=ttl_ms)
-
-        def handleInputRows(self, key, rows, timer_values):
-            frames = list(rows)
-            df = (pd.concat(frames, ignore_index=True) if frames
-                  else pd.DataFrame(columns=cols))
-            if df.empty:
-                return
-            last = (tuple(self._basis.get()) if self._basis.exists()
-                    else None)
-            kept, new_basis = _dedup_basis_batch(df, last, cols)
-            self._basis.update(new_basis)
-            yield kept
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.groupBy(*VEHICLE_KEY)
-        .transformWithStateInPandas(
-            BasisDedup(),
-            outputStructType=RT_EVENTS,
-            outputMode="append",
-            timeMode="processingTime",
         )
     )
 
@@ -249,29 +189,6 @@ def merge_batch_overwrite(spark: SparkSession, recs: DataFrame,
     return True
 
 
-def merge_batch_snapshot(spark: SparkSession, store, recs: DataFrame,
-                         source: str, batch_id: int | None = None) -> bool:
-    """Snapshot-atomic variant of :func:`merge_batch_overwrite`: the
-    merged partitions publish through the SnapshotStore manifest
-    (sources/snapshot.py), so a concurrent reader sees the whole
-    multi-partition batch or none of it, and a foreachBatch replay of
-    an already-committed ``batch_id`` is a byte-identical no-op (the
-    reference's batched-statement retry semantics,
-    /root/reference/src/importer/batched_statements.rs)."""
-    from ..plans.import_etl import latest_wins_merge
-
-    if batch_id is not None and batch_id == store.last_batch_id():
-        return False  # replayed batch: already committed
-    touched = [r.trip_start_date for r in
-               recs.select("trip_start_date").distinct().collect()]
-    if not touched:
-        return False
-    existing = store.read_partitions(
-        spark, source=source, trip_start_date=touched)
-    merged = latest_wins_merge(recs, existing=existing)
-    return store.commit(merged, batch_id=batch_id)
-
-
 def run_import_stream(
     spark: SparkSession,
     rt_dir: str,
@@ -284,32 +201,17 @@ def run_import_stream(
     dedup_basis: bool = False,
     trigger: dict | None = None,
     pinger: Pinger | None = None,
-    publish: str = "overwrite",
 ):
     """The full streaming import: files → decode → (optional ST2 dedup)
     → records ETL → latest-wins merge into a parquet records table
     partitioned by (source, trip_start_date).
 
-    ``publish`` selects the commit protocol: ``"overwrite"`` (default)
-    is the plain dynamic-partition-overwrite layout (directly
-    `spark.read.parquet`-able, no manifest indirection);
-    ``"snapshot"`` routes through the SnapshotStore manifest
-    (sources/snapshot.py) — snapshot-atomic across partitions for
-    concurrent readers and byte-identical under micro-batch replay,
-    the right mode when anything reads the table while imports run.
-    Both are partition-scoped merges; on a cluster with a table format
-    either becomes a Delta/Iceberg MERGE (the reference upserts
-    per-row into MySQL, importer/mod.rs:579-611).
+    Each micro-batch is one partition-scoped merge published by
+    dynamic partition overwrite (:func:`merge_batch_overwrite`); on a
+    cluster with a table format it becomes a Delta/Iceberg MERGE (the
+    reference upserts per-row into MySQL, importer/mod.rs:579-611).
     """
-    if publish not in ("snapshot", "overwrite"):
-        raise ValueError(f"unknown publish mode {publish!r}")
     from ..plans.import_etl import build_records
-
-    store = None
-    if publish == "snapshot":
-        from ..sources.snapshot import SnapshotStore
-
-        store = SnapshotStore(records_dir, ["source", "trip_start_date"])
 
     events = stream_rt_events(spark, rt_dir)
     if dedup_basis:
@@ -319,10 +221,7 @@ def run_import_stream(
         recs = build_records(batch_df, trips, stop_times,
                              source, schedule_file_name).cache()
         try:
-            if store is not None:
-                merge_batch_snapshot(spark, store, recs, source, batch_id)
-            else:
-                merge_batch_overwrite(spark, recs, records_dir, source)
+            merge_batch_overwrite(spark, recs, records_dir, source)
         finally:
             recs.unpersist()
             if pinger is not None:

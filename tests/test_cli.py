@@ -76,6 +76,38 @@ class TestCli:
         preds = spark.read.parquet(str(lake / "predictions"))
         assert preds.count() > 0
 
+    def test_04b_predict_start_counts_on_the_write(
+            self, spark, lake, capsys, jobs, monkeypatch, tmp_path):
+        """The printed row count rides on the write's own job: no
+        Spark job runs after the predictions are written (a count()
+        would re-run the whole prediction plan), and the count equals
+        the rows in the fresh predictions table."""
+        import re
+        import shutil
+
+        from dystonse_gtfs_importer_spark.sources import store
+
+        fresh = tmp_path / "lake"
+        for d in ("schedules", "stats"):
+            shutil.copytree(lake / d, fresh / d)
+        sc, real, seen = spark.sparkContext, store.write_predictions, []
+
+        def write(preds, path, mode="overwrite"):
+            real(preds, path, mode=mode)
+            group = sc.getLocalProperty("spark.jobGroup.id")
+            seen.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+        monkeypatch.setattr(store, "write_predictions", write)
+        capsys.readouterr()
+        with jobs() as n:
+            assert _run(spark, fresh, "predict", "start",
+                        "--now", "2024-01-01T08:30:00") == 0
+        assert seen == n, (seen, n)
+        printed = int(re.search(r"wrote (\d+) scheduled prediction rows",
+                                capsys.readouterr().out).group(1))
+        written = spark.read.parquet(str(fresh / "predictions")).count()
+        assert printed == written > 0
+
     def test_05_predict_single(self, spark, lake, capsys):
         assert _run(spark, lake, "predict", "single",
                     "--route-id", "R1", "--trip-id", "TR1v1n0",
@@ -167,6 +199,20 @@ class TestCli:
         sched = sorted((lake / "schedules").iterdir())[0]
         assert _run(spark, lake, "import", "-r", "manual",
                     str(sched), str(rt_file)) == 0
+
+
+class TestAppendPredictions:
+    def test_counts_rows_written_including_none(self, spark, tmp_path):
+        from dystonse_gtfs_importer_spark.cli import _append_predictions
+
+        schema = "source string, trip_start_date string, v int"
+        path = str(tmp_path / "predictions")
+        empty = spark.createDataFrame([], schema)
+        assert _append_predictions(empty, path) == 0
+        rows = spark.createDataFrame(
+            [("s", "2024-01-01", i) for i in range(3)], schema)
+        assert _append_predictions(rows, path) == 3
+        assert spark.read.parquet(path).count() == 3
 
 
 class TestCorpusIngestCli:

@@ -225,3 +225,96 @@ class TestCurvePipelines:
         g = dc.where(F.col("precision_type") == PRECISION_GENERAL).first()
         assert g.route_type is not None and g.route_section in (
             "beginning", "middle", "end")
+
+    def test_default_ladder_numpy_recompute(self, spark, items,
+                                            schedule_dfs):
+        """The whole default ladder recomputed from its leaf basis with
+        curves.py alone must equal ``default_curves`` exactly: leaves
+        gated at ≥10 values, built, simplified and float32 round-
+        tripped; each rung averaged in sorted key order; sample sizes
+        the int of the inputs' mean.  A 9-value leaf added to the
+        basis must fall to the gate and change nothing."""
+        from dystonse_gtfs_importer_spark import curves as cv
+        from dystonse_gtfs_importer_spark.plans.analyse_gtfs import (
+            default_curves, default_curves_from_counted, default_leaf_counted,
+        )
+        from dystonse_gtfs_importer_spark.schemas import (
+            PRECISION_FALLBACK_GENERAL, PRECISION_GENERAL,
+            PRECISION_SUPER_GENERAL,
+        )
+
+        routes = schedule_dfs["routes"]
+        counted = default_leaf_counted(items, routes)
+        dims = ["route_type", "route_section", "time_slot", "event_type"]
+        first = counted.first().asDict()
+        small = [{**first, "route_variant": -1, "delay": d, "cnt": c}
+                 for d, c in ((-12, 2), (0, 2), (12, 2), (24, 3))]
+        counted = counted.unionByName(spark.createDataFrame(
+            [[r[c] for c in counted.columns] for r in small], counted.schema))
+        basis = counted.toPandas()
+
+        def f32(curve):
+            return cv.Curve.from_points(curve.points())
+
+        def rung(rows, keys, precision):
+            out = []
+            for key, grp in sorted(_group(rows, keys).items()):
+                out.append({
+                    **dict.fromkeys(dims), **dict(zip(keys, key)),
+                    "curve": f32(cv.average_curves([r["curve"]
+                                                    for r in grp])),
+                    "n": int(np.mean([r["n"] for r in grp])),
+                    "p": precision})
+            return out
+
+        leaves, gated = [], 0
+        for key, g in basis.groupby(dims + ["route_variant"], sort=True):
+            n = int(g["cnt"].sum())
+            made = (cv.make_curve_counted(g["delay"].to_numpy(float),
+                                          g["cnt"].to_numpy(float))
+                    if n >= 10 else None)
+            if made is None:
+                gated += 1
+                continue
+            leaves.append({**dict(zip(dims, key)), "n": n,
+                           "curve": f32(cv.simplify(made[0], 0.01))})
+        assert gated == 1 and leaves  # only the added leaf is gated
+        general = rung(leaves, dims, PRECISION_GENERAL)
+        fallback = rung(general, ["route_type", "event_type"],
+                        PRECISION_FALLBACK_GENERAL)
+        supergeneral = rung(fallback, ["event_type"], PRECISION_SUPER_GENERAL)
+        want = {(tuple(r[k] for k in dims), r["p"]):
+                (r["n"], list(zip(r["curve"].xs, r["curve"].ys)))
+                for r in general + fallback + supergeneral}
+
+        for df in (default_curves(items, routes),
+                   default_curves_from_counted(counted)):
+            got = {(tuple(r[k] for k in dims), r.precision_type):
+                   (r.sample_size, [(p.x, p.y) for p in r.curve])
+                   for r in df.collect()}
+            assert got == want and len(got) == 26
+
+    def test_default_curves_job_count(self, items, schedule_dfs, jobs,
+                                      tmp_path):
+        """The ladder is one grouped pass plus driver code: computing
+        and writing the default table stays within 6 Spark jobs."""
+        from dystonse_gtfs_importer_spark.plans.analyse_gtfs import (
+            default_curves,
+        )
+        from dystonse_gtfs_importer_spark.sources.store import (
+            write_curve_tables,
+        )
+
+        items.count()  # materialize the shared cache outside the block
+        with jobs() as n:
+            write_curve_tables(
+                {"default": default_curves(items, schedule_dfs["routes"])},
+                str(tmp_path / "stats"))
+        assert 0 < n[0] <= 6, n
+
+
+def _group(rows: list[dict], keys: list[str]) -> dict[tuple, list]:
+    out: dict[tuple, list] = {}
+    for r in rows:
+        out.setdefault(tuple(r[k] for k in keys), []).append(r)
+    return out

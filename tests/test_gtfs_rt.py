@@ -6,7 +6,6 @@ from __future__ import annotations
 import zipfile
 
 import pyspark.sql.functions as F
-import pytest
 
 from dystonse_gtfs_importer_spark.sources.gtfs_rt import (
     decode_feed_message, encode_feed_message,
@@ -105,97 +104,3 @@ class TestSparkSource:
         assert r[4].delay_arrival == 60 and r[4].delay_departure is None
         assert str(r[1].trip_start_date) == "2024-01-01"
         assert r[1].trip_start_time == 8 * 3600
-
-
-class TestJvmDecoder:
-    """Optional spark-protobuf leg (S2 scale path, gtfs_rt_jvm)."""
-
-    def test_descriptor_set_structure(self):
-        """The generated FileDescriptorSet must describe exactly the
-        field numbers the Python wire decoder reads — parsed back with
-        the same wire reader, no protobuf runtime needed."""
-        from dystonse_gtfs_importer_spark.sources import gtfs_rt_jvm as J
-        from dystonse_gtfs_importer_spark.sources.gtfs_rt import iter_fields
-
-        blob = J.descriptor_set_bytes()
-        files = [v for f, _w, v in iter_fields(blob) if f == 1]
-        assert len(files) == 1
-        pkg = None
-        messages = {}
-        for f, _w, v in iter_fields(files[0]):
-            if f == 2:
-                pkg = v.decode()
-            elif f == 4:  # message_type
-                name, fields = None, {}
-                for mf, _mw, mv in iter_fields(v):
-                    if mf == 1:
-                        name = mv.decode()
-                    elif mf == 2:  # field
-                        fd = {ff: fv for ff, _fw, fv in iter_fields(mv)}
-                        fields[fd[1].decode()] = {
-                            "number": fd[3], "label": fd[4], "type": fd[5],
-                            "type_name": fd.get(6, b"").decode() or None,
-                        }
-                messages[name] = fields
-        assert pkg == "transit_realtime"
-        # the exact leaves gtfs_rt.decode_feed_message walks
-        assert messages["FeedHeader"]["timestamp"]["number"] == 3
-        assert messages["FeedEntity"]["trip_update"]["number"] == 3
-        td = messages["TripDescriptor"]
-        assert (td["trip_id"]["number"], td["start_time"]["number"],
-                td["start_date"]["number"], td["route_id"]["number"]) \
-            == (1, 2, 3, 5)
-        stu = messages["StopTimeUpdate"]
-        assert (stu["stop_sequence"]["number"], stu["arrival"]["number"],
-                stu["departure"]["number"], stu["stop_id"]["number"]) \
-            == (1, 2, 3, 4)
-        assert messages["StopTimeEvent"]["delay"]["number"] == 1
-        assert messages["TripUpdate"]["stop_time_update"]["label"] == 3
-        assert messages["FeedMessage"]["entity"]["label"] == 3
-        # every message reference resolves inside the set
-        for fields in messages.values():
-            for fd in fields.values():
-                if fd["type_name"]:
-                    ref = fd["type_name"].rsplit(".", 1)[-1]
-                    assert ref in messages, fd["type_name"]
-
-    def test_auto_selects_available_decoder(self, spark, tmp_path):
-        """read_gtfs_rt_auto returns identical rows whichever decoder
-        the environment provides."""
-        from dystonse_gtfs_importer_spark.sources.gtfs_rt_jvm import (
-            jvm_protobuf_available, read_gtfs_rt_auto,
-        )
-
-        d = tmp_path / "rt"
-        d.mkdir()
-        (d / "a.pb").write_bytes(sample_feed(1704096000))
-        df = read_gtfs_rt_auto(spark, str(d))
-        rows = {(r.trip_id, r.stop_sequence, r.arrival_delay,
-                 r.departure_delay) for r in df.collect()}
-        assert ("T1", 2, None, -30) in rows and len(rows) == 4
-        # record which leg actually ran, for the round log
-        print("jvm_protobuf_available:", jvm_protobuf_available(spark))
-
-    def test_jvm_python_parity(self, spark, tmp_path):
-        """Row-level parity of the two decoders (runs only where the
-        optional spark-protobuf jar is on the classpath)."""
-        from dystonse_gtfs_importer_spark.sources.gtfs_rt_jvm import (
-            jvm_protobuf_available, read_gtfs_rt_jvm,
-        )
-
-        if not jvm_protobuf_available(spark):
-            pytest.skip("spark-protobuf jar absent (optional module is "
-                        "not in the pyspark wheel); JVM leg untestable "
-                        "in this environment — descriptor structure is "
-                        "pinned by test_descriptor_set_structure")
-        from dystonse_gtfs_importer_spark.sources.gtfs_rt import read_gtfs_rt
-
-        d = tmp_path / "rt"
-        d.mkdir()
-        (d / "a.pb").write_bytes(sample_feed(1704096000))
-        (d / "b.pb").write_bytes(sample_feed(1704096120))
-        (d / "bad.pb").write_bytes(b"\xff\xff\xff\x01garbage")
-        key = lambda r: (r.feed_file, r.trip_id, r.stop_sequence)
-        py = sorted(read_gtfs_rt(spark, str(d)).collect(), key=key)
-        jv = sorted(read_gtfs_rt_jvm(spark, str(d)).collect(), key=key)
-        assert [tuple(r) for r in py] == [tuple(r) for r in jv]

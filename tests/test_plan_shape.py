@@ -22,6 +22,21 @@ def n_exchanges(df) -> int:
         plan_of(df).count("Exchange rangepartitioning")
 
 
+def _ecdf_jvm(spark, ev, **kw) -> list:
+    """Rows of ``ecdf_curve_points_jvm_sql`` over ``ev`` (as a temp
+    view), grouped by event_type over the value column."""
+    from dystonse_gtfs_importer_spark.plans.analyse import (
+        ecdf_curve_points_jvm_sql,
+    )
+
+    ev.createOrReplaceTempView("_ecdf_src")
+    try:
+        return spark.sql(ecdf_curve_points_jvm_sql(
+            "_ecdf_src", ["event_type"], "value", **kw)).collect()
+    finally:
+        spark.catalog.dropTempView("_ecdf_src")
+
+
 class TestScanEfficiency:
     def test_filter_pushdown_reaches_parquet(self, spark, sf_smoke):
         from dystonse_gtfs_importer_spark.sources.testdata import load_table
@@ -328,51 +343,12 @@ class TestAggShape:
         read_cols = {c.split(":")[0] for c in m.group(1).split(",") if c}
         assert read_cols == {"event_type", "value"}, plan
 
-    def test_ecdf_counted_equals_per_row(self, spark, sf_smoke):
-        """The counted scale form must be BIT-identical to the per-row
-        form for unfocused (integer) weights — same points, same
-        doubles — so swapping forms by data volume is purely a
-        physical choice."""
-        from dystonse_gtfs_importer_spark.plans.analyse import (
-            ecdf_curve_points, ecdf_curve_points_counted,
-        )
-        from dystonse_gtfs_importer_spark.sources.testdata import load_table
-
-        ev = load_table(spark, sf_smoke, "events")
-        a = {(r.event_type, r.x, r.y, r.sample_size) for r in
-             ecdf_curve_points(ev, ["event_type"], "value").collect()}
-        b = {(r.event_type, r.x, r.y, r.sample_size) for r in
-             ecdf_curve_points_counted(
-                 ev, ["event_type"], "value").collect()}
-        assert a == b and len(a) > 0
-
-    def test_ecdf_counted_partial_agg(self, spark, sf_smoke):
-        """The counted form must partial-aggregate below the first
-        Exchange (map-side combine on (group, value)), read only two
-        columns, and keep the props column out of every stage."""
-        from dystonse_gtfs_importer_spark.plans.analyse import (
-            ecdf_curve_points_counted,
-        )
-        from dystonse_gtfs_importer_spark.sources.testdata import load_table
-
-        ev = load_table(spark, sf_smoke, "events")
-        df = ecdf_curve_points_counted(ev, ["event_type"], "value")
-        plan = plan_of(df)
-        assert "props" not in plan, plan
-        # partial count below the shuffle: HashAggregate appears before
-        # the first Exchange in the bottom-up formatted plan
-        assert "partial_count" in plan or "partial count" in plan.lower(), plan
-        m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
-        read_cols = {c.split(":")[0] for c in m.group(1).split(",") if c}
-        assert read_cols == {"event_type", "value"}, plan
-
-
     def test_ecdf_jvm_equals_per_row(self, spark, sf_smoke):
         """The pure-JVM derivation must reproduce the pandas kernel —
         bit-identical unfocused, and identical at 6 decimals with a
         triangular focus (float summation order differs)."""
         from dystonse_gtfs_importer_spark.plans.analyse import (
-            ecdf_curve_points, ecdf_curve_points_jvm,
+            ecdf_curve_points,
         )
         from dystonse_gtfs_importer_spark.sources.testdata import load_table
 
@@ -380,12 +356,12 @@ class TestAggShape:
         a = {(r.event_type, r.x, r.y, r.sample_size) for r in
              ecdf_curve_points(ev, ["event_type"], "value").collect()}
         b = {(r.event_type, r.x, r.y, r.sample_size) for r in
-             ecdf_curve_points_jvm(ev, ["event_type"], "value").collect()}
+             _ecdf_jvm(spark, ev)}
         assert a == b and len(a) > 0
         af = {(r.event_type, r.x, r.y) for r in ecdf_curve_points(
             ev, ["event_type"], "value", focus=50.0, y_round=6).collect()}
-        bf = {(r.event_type, r.x, r.y) for r in ecdf_curve_points_jvm(
-            ev, ["event_type"], "value", focus=50.0, y_round=6).collect()}
+        bf = {(r.event_type, r.x, r.y) for r in _ecdf_jvm(
+            spark, ev, focus=50.0, y_round=6)}
         assert af == bf and len(af) > 0
 
     def test_ecdf_jvm_no_python_in_plan(self, spark, sf_smoke):
@@ -393,12 +369,17 @@ class TestAggShape:
         anywhere in the plan — curve building runs in codegen with a
         partial (group, value) aggregate below the first shuffle."""
         from dystonse_gtfs_importer_spark.plans.analyse import (
-            ecdf_curve_points_jvm,
+            ecdf_curve_points_jvm_sql,
         )
         from dystonse_gtfs_importer_spark.sources.testdata import load_table
 
-        ev = load_table(spark, sf_smoke, "events")
-        plan = plan_of(ecdf_curve_points_jvm(ev, ["event_type"], "value"))
+        load_table(spark, sf_smoke, "events").createOrReplaceTempView(
+            "_ecdf_src")
+        try:
+            plan = plan_of(spark.sql(ecdf_curve_points_jvm_sql(
+                "_ecdf_src", ["event_type"], "value")))
+        finally:
+            spark.catalog.dropTempView("_ecdf_src")
         for op in ("FlatMapGroupsInPandas", "ArrowEvalPython",
                    "BatchEvalPython", "MapInPandas"):
             assert op not in plan, plan
@@ -412,9 +393,10 @@ class TestAggShape:
         post-filter min/count from pre-filter window stats, so the
         exact cases — group min IS 0.0 (row removed), negative min
         with an interior 0.0 (kept), all-zero group (vanishes) — must
-        match the pandas kernel row-for-row."""
+        match the pandas kernel row-for-row, with and without the
+        ``pre_partition`` single-exchange plan."""
         from dystonse_gtfs_importer_spark.plans.analyse import (
-            ecdf_curve_points, ecdf_curve_points_jvm,
+            ecdf_curve_points,
         )
 
         rows = (
@@ -426,42 +408,20 @@ class TestAggShape:
             + [("C", 0.0), ("C", 0.0), ("C", 0.0)]
         )
         ev = spark.createDataFrame(rows, "event_type string, value double")
-        a = sorted((r.event_type, r.x, r.y, r.sample_size) for r in
-                   ecdf_curve_points(ev, ["event_type"], "value").collect())
-        b = sorted((r.event_type, r.x, r.y, r.sample_size) for r in
-                   ecdf_curve_points_jvm(ev, ["event_type"],
+        for pre in (False, True):
+            a = sorted((r.event_type, r.x, r.y, r.sample_size) for r in
+                       ecdf_curve_points(ev, ["event_type"],
                                          "value").collect())
-        assert a == b and len(a) > 0
-        assert not any(t[0] == "C" for t in a)
-        af = sorted((r.event_type, r.x, r.y) for r in ecdf_curve_points(
-            ev, ["event_type"], "value", focus=10.0, y_round=6).collect())
-        bf = sorted((r.event_type, r.x, r.y) for r in ecdf_curve_points_jvm(
-            ev, ["event_type"], "value", focus=10.0, y_round=6).collect())
-        assert af == bf and len(af) > 0
-
-    def test_ecdf_jvm_sql_rendering_equals_column_form(self, spark):
-        """The one-call SQL rendering (what the registry/bench run)
-        must reproduce the Column form row-for-row — including the
-        zero-at-minimum edge groups — focused and unfocused."""
-        from dystonse_gtfs_importer_spark.plans.analyse import (
-            ecdf_curve_points_jvm, ecdf_curve_points_jvm_sql,
-        )
-
-        rows = ([("A", v) for v in [0.0, 12.0, 24.0, 24.0, 36.0]]
-                + [("B", v) for v in [-24.0, -12.0, 0.0, 12.0]]
-                + [("C", 0.0), ("C", 0.0)])
-        ev = spark.createDataFrame(rows, "event_type string, value double")
-        ev.createOrReplaceTempView("_ecdf_sql_src")
-        try:
-            for kw in ({}, {"focus": 10.0, "y_round": 6}):
-                a = sorted(map(tuple, ecdf_curve_points_jvm(
-                    ev, ["event_type"], "value", **kw).collect()))
-                b = sorted(map(tuple, spark.sql(ecdf_curve_points_jvm_sql(
-                    "_ecdf_sql_src", ["event_type"], "value",
-                    **kw)).collect()))
-                assert a == b and len(a) > 0, kw
-        finally:
-            spark.catalog.dropTempView("_ecdf_sql_src")
+            b = sorted((r.event_type, r.x, r.y, r.sample_size)
+                       for r in _ecdf_jvm(spark, ev, pre_partition=pre))
+            assert a == b and len(a) > 0, pre
+            assert not any(t[0] == "C" for t in a)
+            af = sorted((r.event_type, r.x, r.y) for r in ecdf_curve_points(
+                ev, ["event_type"], "value", focus=10.0,
+                y_round=6).collect())
+            bf = sorted((r.event_type, r.x, r.y) for r in _ecdf_jvm(
+                spark, ev, focus=10.0, y_round=6, pre_partition=pre))
+            assert af == bf and len(af) > 0, pre
 
 
     def test_seeded_shuffle_no_global_window_over_corpus(self, spark,

@@ -1,5 +1,5 @@
-"""Snapshot-atomic publish (sources/snapshot.py) and foreachBatch
-replay idempotence for the streaming latest-wins merge.
+"""Snapshot-atomic publish (sources/snapshot.py) and replay
+idempotence of the streaming latest-wins merge.
 
 The invariants under test:
 * a reader NEVER observes a half-published multi-partition batch —
@@ -24,7 +24,7 @@ import pytest
 
 from dystonse_gtfs_importer_spark.sources.snapshot import SnapshotStore
 from dystonse_gtfs_importer_spark.streaming.import_stream import (
-    merge_batch_overwrite, merge_batch_snapshot,
+    merge_batch_overwrite,
 )
 
 PART_COLS = ["source", "trip_start_date"]
@@ -59,9 +59,9 @@ class TestSnapshotStore:
     def test_commit_and_manifest_read(self, spark, tmp_path):
         store = SnapshotStore(str(tmp_path / "t"), PART_COLS)
         assert store.read(spark) is None
-        merge_batch_snapshot(spark, store, _recs(spark, [
+        store.commit(_recs(spark, [
             ("2024-01-01", 1, 60, 0), ("2024-01-02", 1, 70, 0)]),
-            "test", batch_id=0)
+            batch_id=0)
         assert _state(store, spark) == {
             ("2024-01-01", 1, 60.0), ("2024-01-02", 1, 70.0)}
         # manifest-level partition pruning reads only matching files
@@ -77,9 +77,9 @@ class TestSnapshotStore:
         sees exactly the old snapshot (never a mix), and the retry
         lands the full batch."""
         store = SnapshotStore(str(tmp_path / "t"), PART_COLS)
-        merge_batch_snapshot(spark, store, _recs(spark, [
+        store.commit(_recs(spark, [
             ("2024-01-01", 1, 60, 0), ("2024-01-02", 1, 70, 0)]),
-            "test", batch_id=0)
+            batch_id=0)
         old = _state(store, spark)
         old_manifest = (Path(store.root) / "MANIFEST").read_text()
 
@@ -87,18 +87,19 @@ class TestSnapshotStore:
         monkeypatch.setattr(
             SnapshotStore, "_publish",
             lambda self, m: (_ for _ in ()).throw(boom))
+        # the new full content of both partitions
         batch2 = _recs(spark, [("2024-01-01", 1, 90, 120),
+                               ("2024-01-02", 1, 70, 0),
                                ("2024-01-02", 2, 80, 120)])
         with pytest.raises(RuntimeError):
-            merge_batch_snapshot(spark, store, batch2, "test", batch_id=1)
+            store.commit(batch2, batch_id=1)
         # staged files are on disk, but the table is byte-for-byte the
         # old snapshot: manifest untouched, reads see only old rows
         assert (Path(store.root) / "MANIFEST").read_text() == old_manifest
         assert _state(store, spark) == old
 
         monkeypatch.undo()
-        assert merge_batch_snapshot(spark, store, batch2, "test",
-                                    batch_id=1)
+        assert store.commit(batch2, batch_id=1)
         assert _state(store, spark) == {
             ("2024-01-01", 1, 90.0),
             ("2024-01-02", 1, 70.0), ("2024-01-02", 2, 80.0)}
@@ -109,12 +110,12 @@ class TestSnapshotStore:
         before a commit still reads the complete old snapshot after
         it (replaced files are retained until vacuum)."""
         store = SnapshotStore(str(tmp_path / "t"), PART_COLS)
-        merge_batch_snapshot(spark, store, _recs(spark, [
+        store.commit(_recs(spark, [
             ("2024-01-01", 1, 60, 0), ("2024-01-02", 1, 70, 0)]),
-            "test", batch_id=0)
+            batch_id=0)
         old_files = store._files()
-        merge_batch_snapshot(spark, store, _recs(spark, [
-            ("2024-01-01", 1, 90, 120)]), "test", batch_id=1)
+        store.commit(_recs(spark, [("2024-01-01", 1, 90, 120)]),
+                     batch_id=1)
         held = (spark.read.option("basePath", str(store.data_dir))
                 .parquet(*old_files))
         assert {(str(r.trip_start_date), r.delay_arrival)
@@ -138,82 +139,25 @@ class TestSnapshotStore:
         store = SnapshotStore(str(tmp_path / "t"), PART_COLS)
         batch = _recs(spark, [("2024-01-01", 1, 60, 0),
                               ("2024-01-02", 1, 70, 0)])
-        assert merge_batch_snapshot(spark, store, batch, "test",
-                                    batch_id=7)
+        assert store.commit(batch, batch_id=7)
         manifest = (Path(store.root) / "MANIFEST").read_bytes()
         files = {p: p.read_bytes()
                  for p in Path(store.data_dir).rglob("*.parquet")}
 
-        assert not merge_batch_snapshot(spark, store, batch, "test",
-                                        batch_id=7)  # replayed
+        assert not store.commit(batch, batch_id=7)  # replayed
         assert (Path(store.root) / "MANIFEST").read_bytes() == manifest
         assert {p: p.read_bytes()
                 for p in Path(store.data_dir).rglob("*.parquet")} == files
 
     def test_next_batch_id_still_merges(self, spark, tmp_path):
         store = SnapshotStore(str(tmp_path / "t"), PART_COLS)
-        merge_batch_snapshot(spark, store, _recs(
-            spark, [("2024-01-01", 1, 60, 0)]), "test", batch_id=0)
-        # same data under a NEW batch id: latest-wins keeps content
-        assert merge_batch_snapshot(spark, store, _recs(
-            spark, [("2024-01-01", 1, 60, 0)]), "test", batch_id=1)
+        store.commit(_recs(spark, [("2024-01-01", 1, 60, 0)]), batch_id=0)
+        # same data under a NEW batch id: a new version, same content
+        assert store.commit(_recs(spark, [("2024-01-01", 1, 60, 0)]),
+                            batch_id=1)
         assert _state(store, spark) == {("2024-01-01", 1, 60.0)}
         assert json.loads((Path(store.root) / "MANIFEST")
                           .read_text())["version"] == 2
-
-
-class TestStreamSnapshotMode:
-    def test_import_stream_publishes_through_manifest(self, spark,
-                                                      tmp_path):
-        """run_import_stream(publish='snapshot') end-to-end: two
-        stream runs land latest-wins state readable only through the
-        manifest, with the second batch's id recorded."""
-        from gtfs_fixtures import build_schedule, write_gtfs_dir
-
-        from dystonse_gtfs_importer_spark.sources.gtfs import read_gtfs
-        from dystonse_gtfs_importer_spark.sources.gtfs_rt import (
-            encode_feed_message,
-        )
-        from dystonse_gtfs_importer_spark.streaming.import_stream import (
-            run_import_stream,
-        )
-
-        def feed(ts, pairs):
-            return encode_feed_message(ts, [
-                {"trip_id": "TR1v1n0", "route_id": "R1",
-                 "start_date": "20240101", "start_time": "08:00:00",
-                 "stop_time_updates": [(s, f"S{s}", d, d)
-                                       for s, d in pairs]}])
-
-        g = tmp_path / "gtfs"
-        g.mkdir()
-        write_gtfs_dir(build_schedule(), g)
-        sched = read_gtfs(spark, str(g))
-        trips = sched["trips"].cache()
-        stop_times = sched["stop_times"].cache()
-        rt = tmp_path / "rt"
-        rt.mkdir()
-        records_dir = str(tmp_path / "records")
-        ckpt = str(tmp_path / "ckpt")
-
-        (rt / "f1.pb").write_bytes(feed(1704096000, [(1, 60), (2, 70)]))
-        q = run_import_stream(spark, str(rt), trips, stop_times,
-                              "test", "sched", records_dir, ckpt,
-                              publish="snapshot")
-        q.awaitTermination(120)
-        (rt / "f2.pb").write_bytes(feed(1704096120, [(1, 90)]))
-        q = run_import_stream(spark, str(rt), trips, stop_times,
-                              "test", "sched", records_dir, ckpt,
-                              publish="snapshot")
-        q.awaitTermination(120)
-
-        store = SnapshotStore(records_dir, PART_COLS)
-        recs = store.read(spark)
-        got = {r.stop_sequence: r.delay_arrival for r in recs.collect()}
-        assert got == {1: 90, 2: 70}
-        # no bare-parquet layout at the root: data lives under data/
-        assert not list(Path(records_dir).glob("source=*"))
-        assert store.manifest()["batch_id"] is not None
 
 
 class TestOverwriteReplay:

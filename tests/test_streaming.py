@@ -6,7 +6,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pyspark.sql.functions as F
-import pytest
 
 from gtfs_fixtures import build_schedule, write_gtfs_dir
 
@@ -191,52 +190,6 @@ class TestStreamingImport:
             time.sleep(0.5)
         q.stop()
         assert _bases() == want
-
-    def test_prediction_basis_dedup_tws_matches_classic(self, spark,
-                                                        tmp_path):
-        """ST2 twin on the Spark 4 transformWithState API: identical
-        kept rows for the same input stream, with TTL declared on the
-        ValueState instead of manual timeouts.  Requires protobuf
-        (the transformWithState worker protocol) + RocksDB state
-        store; skipped where the environment lacks them."""
-        pytest.importorskip(
-            "google.protobuf",
-            reason="transformWithState worker needs protobuf")
-        from dystonse_gtfs_importer_spark.schemas import RT_EVENTS
-        from dystonse_gtfs_importer_spark.streaming.import_stream import (
-            dedup_prediction_basis_tws,
-        )
-
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider")
-
-        src = tmp_path / "events"
-        src.mkdir()
-        import json
-
-        rows = []
-        for i, (seq, dep) in enumerate([(1, 60), (1, 60), (1, 60),
-                                        (2, 60), (2, 72)]):
-            rows.append({
-                "feed_file": f"f{i}", "header_timestamp": 1704096000 + i,
-                "trip_id": "T1", "route_id": "R1", "start_date": "20240101",
-                "start_time": "08:00:00", "stop_sequence": seq,
-                "stop_id": f"S{seq}", "arrival_delay": 5,
-                "departure_delay": dep,
-            })
-        (src / "a.json").write_text("\n".join(json.dumps(r) for r in rows))
-
-        stream = spark.readStream.schema(RT_EVENTS).json(str(src))
-        dedup = dedup_prediction_basis_tws(stream)
-        q = (dedup.writeStream.format("memory").queryName("dedup_tws_out")
-             .option("checkpointLocation", str(tmp_path / "ck_tws"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        out = spark.sql("SELECT * FROM dedup_tws_out").collect()
-        bases = [(r.stop_sequence, r.departure_delay) for r in out]
-        assert bases == [(1, 60), (2, 60), (2, 72)]
 
 
 class TestEventTimeWindows:

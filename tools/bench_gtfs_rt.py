@@ -2,12 +2,11 @@
 """S2 decoder throughput: the measured per-core statement behind the
 ingest sizing in SCALING.md.
 
-The pure-Python wire decoder (`sources/gtfs_rt.py`) is the default S2
-path; the JVM `from_protobuf` leg (`sources/gtfs_rt_jvm.py`) is the
-scale path but its jar is absent from the pyspark wheel here, so the
-honest capacity question is: how many feed files per second does ONE
-Python worker core decode, and does the mapInPandas fan-out scale it
-by the worker count?
+The pure-Python wire decoder (`sources/gtfs_rt.py`) is the only S2
+path (a JVM `from_protobuf` leg needs the spark-protobuf jar; see
+SCALING.md), so the capacity question is: how many feed files per
+second does ONE Python worker core decode, and does the mapInPandas
+fan-out scale it by the worker count?
 
 Two measurements:
 
