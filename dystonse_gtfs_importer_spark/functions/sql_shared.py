@@ -469,6 +469,17 @@ def gtfs_noon_datetime(service_date: str, seconds: str) -> str:
     )
 
 
+def event_type_stack(columns: dict[str, tuple[str, str]]) -> str:
+    """Spark ``stack`` generator: one row per GTFS event type,
+    ``event_type`` 1 (arrival) then 2 (departure), each output column
+    taking its (arrival, departure) source column from ``columns``.  A
+    single fan-out of one plan, where a union would repeat the plan."""
+    rows = ", ".join(
+        f"CAST({et} AS TINYINT), " + ", ".join(c[i] for c in columns.values())
+        for i, et in enumerate((1, 2)))
+    return f"stack(2, {rows}) AS (event_type, {', '.join(columns)})"
+
+
 # ---------------------------------------------------------------------------
 # text analysis (documents table)
 # ---------------------------------------------------------------------------

@@ -81,17 +81,11 @@ def _unpivot_events(items: DataFrame) -> DataFrame:
     and scheduled datetime; null-delay events dropped (F4)."""
     cols = [c for c in items.columns
             if not c.startswith(("delay_", "dt_", "slot_"))]
-    parts = []
-    for et_id, et in ((1, "arrival"), (2, "departure")):
-        parts.append(items.select(
-            *cols,
-            F.lit(et_id).cast("tinyint").alias("event_type"),
-            F.col(f"delay_{et}").alias("delay"),
-            F.col(f"slot_{et}").alias("time_slot"),
-            F.col(f"dt_{et}").alias("event_dt"),
-        ))
-    df = parts[0].unionByName(parts[1])
-    return df.where(F.col("delay").isNotNull())
+    return items.select(*cols, F.expr(S.event_type_stack({
+        "delay": ("delay_arrival", "delay_departure"),
+        "time_slot": ("slot_arrival", "slot_departure"),
+        "event_dt": ("dt_arrival", "dt_departure")}))
+    ).where(F.col("delay").isNotNull())
 
 
 def _with_default_slot(df: DataFrame) -> DataFrame:
@@ -423,9 +417,11 @@ def default_curves_from_counted(counted: DataFrame) -> DataFrame:
                              PRECISION_FALLBACK_GENERAL)
     supergeneral = _average_rows(fallback, ["event_type"],
                                  PRECISION_SUPER_GENERAL)
+    # from pandas through Arrow: a LocalRelation, no Python-worker scan
     return counted.sparkSession.createDataFrame(
-        [[r[c] for c in schema.fieldNames()]
-         for r in general + fallback + supergeneral], schema)
+        pd.DataFrame([[r[c] for c in schema.fieldNames()]
+                      for r in general + fallback + supergeneral],
+                     columns=schema.fieldNames()), schema)
 
 
 def default_curves(items: DataFrame, routes: DataFrame) -> DataFrame:

@@ -273,18 +273,15 @@ def prediction_lookups(basis: DataFrame, vstops: DataFrame,
            .where(F.col("stop_index") > F.col("start_stop_index"))
            .join(F.broadcast(routes.select("route_id", "route_type")),
                  "route_id"))
-    out = None
-    for et, secs in ((1, "arrival_secs"), (2, "departure_secs")):
-        p = fan.select(
-            *vehicle, "route_type", "stop_id", "stop_sequence",
-            F.lit(et).cast("tinyint").alias("event_type"),
-            F.expr(S.gtfs_noon_datetime("trip_start_date", secs))
+    # one row per stop × event type, fanned out after the joins
+    return fan.select("*", F.expr(S.event_type_stack(
+        {"sched_event_secs": ("arrival_secs", "departure_secs")}))).select(
+            *vehicle, "route_type", "stop_id", "stop_sequence", "event_type",
+            F.expr(S.gtfs_noon_datetime("trip_start_date", "sched_event_secs"))
              .alias("event_dt"),
-            F.col(secs).alias("sched_event_secs"),
+            "sched_event_secs",
             F.col("stop_index").alias("end_stop_index"),
             "stop_count", "start_stop_index", "initial_delay")
-        out = p if out is None else out.unionByName(p)
-    return out
 
 
 def prediction_rows(predicted: DataFrame, source: str,

@@ -162,23 +162,22 @@ def scheduled_predictions(
         "route_id", "route_variant", "stop_sequence",
         "stop_index", "stop_count"))
 
-    base = (vehicles.join(routes, "route_id")
-            .join(own_st, "trip_id")
-            .join(vs, ["route_id", "route_variant", "stop_sequence"]))
-    lookups = None
-    for et_id, secs in ((1, "arrival_secs"), (2, "departure_secs")):
-        part = base.select(
-            "route_id", "route_variant", "route_type",
-            "trip_id", "trip_start_date", "trip_start_time",
-            "stop_id", "stop_sequence",
-            F.lit(et_id).cast("tinyint").alias("event_type"),
-            F.expr(SQL.gtfs_noon_datetime("trip_start_date", secs))
-             .alias("event_dt"),
-            F.col(secs).alias("sched_event_secs"),
-            F.col("stop_index").alias("end_stop_index"),
-            "stop_count",
-        )
-        lookups = part if lookups is None else lookups.unionByName(part)
+    # one row per stop × event type, fanned out after the joins
+    lookups = (vehicles.join(routes, "route_id")
+               .join(own_st, "trip_id")
+               .join(vs, ["route_id", "route_variant", "stop_sequence"])
+               .select("*", F.expr(SQL.event_type_stack(
+                   {"sched_event_secs": ("arrival_secs", "departure_secs")})))
+               .select(
+                   "route_id", "route_variant", "route_type",
+                   "trip_id", "trip_start_date", "trip_start_time",
+                   "stop_id", "stop_sequence", "event_type",
+                   F.expr(SQL.gtfs_noon_datetime("trip_start_date",
+                                                 "sched_event_secs"))
+                    .alias("event_dt"),
+                   "sched_event_secs",
+                   F.col("stop_index").alias("end_stop_index"),
+                   "stop_count"))
 
     predicted = predict(lookups, curve_tables["specific"],
                         curve_tables["general"], curve_tables["default"])

@@ -161,3 +161,16 @@ def build_rt_events(schedule: dict[str, pd.DataFrame],
 def write_gtfs_dir(schedule: dict[str, pd.DataFrame], path) -> None:
     for name, df in schedule.items():
         df.to_csv(f"{path}/{name}.txt", index=False)
+
+
+def union_per_event_type(df, keep: list[str],
+                         columns: dict[str, tuple[str, str]]):
+    """The fan-out over event types as a union of one select per event
+    type: the oracle for the engine's single ``stack`` fan-out."""
+    import pyspark.sql.functions as F
+
+    parts = [df.select(*keep, F.lit(et).cast("tinyint").alias("event_type"),
+                       *[F.col(src[i]).alias(out)
+                         for out, src in columns.items()])
+             for i, et in enumerate((1, 2))]
+    return parts[0].unionByName(parts[1])

@@ -45,7 +45,7 @@ def flow(spark, tmp_path_factory):
     records = read_records(spark, str(base / "records"))
 
     # 2. analyse: records → the three statistics tables, persisted
-    vstops = variant_stops(sched["trips"], sched["stop_times"]).cache()
+    vstops = variant_stops(sched["trips"], sched["stop_times"])
     items = prepare_dbitems(records, vstops).cache()
     tables = {
         "general": general_delay_curves(items),

@@ -9,7 +9,9 @@ import pytest
 
 import pyspark.sql.functions as F
 
-from gtfs_fixtures import build_rt_events, build_schedule, write_gtfs_dir
+from gtfs_fixtures import (
+    build_rt_events, build_schedule, union_per_event_type, write_gtfs_dir,
+)
 
 
 @pytest.fixture(scope="module")
@@ -38,7 +40,7 @@ def records(spark, schedule_dfs):
 def vstops(schedule_dfs):
     from dystonse_gtfs_importer_spark.sources.gtfs import variant_stops
 
-    return variant_stops(schedule_dfs["trips"], schedule_dfs["stop_times"]).cache()
+    return variant_stops(schedule_dfs["trips"], schedule_dfs["stop_times"])
 
 
 class TestGtfsRead:
@@ -62,6 +64,73 @@ class TestGtfsRead:
         assert all(r.stop_count == 8 for r in one)
         # stop_sequence keeps its gaps
         assert [r.stop_sequence for r in one] == [1, 2, 4, 5, 7, 8, 10, 11]
+
+    @pytest.mark.parametrize("header", [
+        "\ufeffstop_id,stop_name",          # UTF-8 BOM
+        '"stop_id","stop, name",""',         # quoted, comma, empty
+        "stop_id,Stop_ID,stop_name,stop_id",  # duplicates, any case
+        "\n  \nstop_id,stop_name",           # blank lines first
+    ])
+    def test_header_names_match_spark_reader(self, spark, tmp_path, header):
+        """The driver-side header read names the columns exactly as
+        Spark's own CSV header parsing does."""
+        from dystonse_gtfs_importer_spark.sources.gtfs import _csv_header
+
+        f = tmp_path / "stops.txt"
+        f.write_text(header + "\nS1,a,b,c\n", encoding="utf-8")
+        assert _csv_header(str(f), False) == \
+            spark.read.csv(str(f), header=True).columns
+
+    def test_bom_header_maps_by_name(self, spark, tmp_path):
+        from dystonse_gtfs_importer_spark.sources.gtfs import read_gtfs
+
+        write_gtfs_dir(build_schedule(), tmp_path)
+        stops = tmp_path / "stops.txt"
+        stops.write_text("\ufeff" + stops.read_text(), encoding="utf-8")
+        got = read_gtfs(spark, str(tmp_path))["stops"]
+        assert got.where(F.col("stop_id").isNull()).count() == 0
+        assert got.count() == len(build_schedule()["stops"])
+
+    def test_load_runs_no_jobs(self, spark, tmp_path, jobs):
+        """Headers are read on the driver and the frames cache lazily:
+        loading a feed runs no Spark job."""
+        from dystonse_gtfs_importer_spark.sources.gtfs import (
+            read_gtfs, variant_stops,
+        )
+
+        write_gtfs_dir(build_schedule(), tmp_path)
+        with jobs() as n:
+            sched = read_gtfs(spark, str(tmp_path))
+            variant_stops(sched["trips"], sched["stop_times"])
+        assert n == [0]
+
+    def test_absent_optional_file_is_empty_local_relation(self,
+                                                          schedule_dfs):
+        """An absent optional file scans nothing: its frame optimizes to
+        an empty LocalRelation carrying the schema's types."""
+        from dystonse_gtfs_importer_spark.schemas import CALENDAR_DATES
+
+        cd = schedule_dfs["calendar_dates"]
+        plan = cd._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation <empty>"), plan
+        assert [(f.name, f.dataType) for f in cd.schema.fields] == \
+            [(f.name, f.dataType) for f in CALENDAR_DATES.fields]
+
+    def test_reread_of_rewritten_dir_returns_new_rows(self, spark, tmp_path):
+        """The frames are cached, yet a new load of a rewritten
+        directory must return the new rows, not the cached old ones."""
+        from dystonse_gtfs_importer_spark.sources.gtfs import read_gtfs
+
+        sched = build_schedule()
+        write_gtfs_dir(sched, tmp_path)
+        ids = {r.route_id for r in
+               read_gtfs(spark, str(tmp_path))["routes"].collect()}
+        assert ids == set(sched["routes"]["route_id"])
+        sched["routes"]["route_id"] = sched["routes"]["route_id"] + "x"
+        write_gtfs_dir(sched, tmp_path)
+        ids = {r.route_id for r in
+               read_gtfs(spark, str(tmp_path))["routes"].collect()}
+        assert ids == set(sched["routes"]["route_id"])
 
 
 class TestImportEtl:
@@ -311,6 +380,52 @@ class TestCurvePipelines:
                 {"default": default_curves(items, schedule_dfs["routes"])},
                 str(tmp_path / "stats"))
         assert 0 < n[0] <= 6, n
+
+    def test_general_curves_job_count(self, items, jobs, tmp_path):
+        """Computing and writing the general table over the shared
+        cached items stays within 4 Spark jobs."""
+        from dystonse_gtfs_importer_spark.plans.analyse_gtfs import (
+            general_delay_curves,
+        )
+        from dystonse_gtfs_importer_spark.sources.store import (
+            write_curve_tables,
+        )
+
+        items.count()  # materialize the shared cache outside the block
+        with jobs() as n:
+            write_curve_tables({"general": general_delay_curves(items)},
+                               str(tmp_path / "stats"))
+        assert 0 < n[0] <= 4, n
+
+    def test_default_table_is_a_local_relation(self, items, schedule_dfs):
+        """The driver-built default table reaches Spark through Arrow:
+        a local table scan, not a Python-RDD (ExistingRDD) scan."""
+        from dystonse_gtfs_importer_spark.plans.analyse_gtfs import (
+            default_curves,
+        )
+
+        dc = default_curves(items, schedule_dfs["routes"])
+        plan = dc._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+    def test_unpivot_stack_equals_union(self, items):
+        """The one ``stack`` fan-out over event types yields the same
+        row multiset as a union of one select per event type."""
+        from dystonse_gtfs_importer_spark.plans.analyse_gtfs import (
+            _unpivot_events,
+        )
+
+        cols = [c for c in items.columns
+                if not c.startswith(("delay_", "dt_", "slot_"))]
+        union = union_per_event_type(items, cols, {
+            "delay": ("delay_arrival", "delay_departure"),
+            "time_slot": ("slot_arrival", "slot_departure"),
+            "event_dt": ("dt_arrival", "dt_departure")}
+        ).where(F.col("delay").isNotNull())
+        got = _unpivot_events(items)
+        assert got.columns == union.columns
+        assert got.exceptAll(union).count() == 0
+        assert union.exceptAll(got).count() == 0
 
 
 def _group(rows: list[dict], keys: list[str]) -> dict[tuple, list]:

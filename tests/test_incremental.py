@@ -35,7 +35,7 @@ def setup(spark, tmp_path_factory):
     gdir.mkdir()
     write_gtfs_dir(build_schedule(), gdir)
     sched = read_gtfs(spark, str(gdir))
-    vstops = variant_stops(sched["trips"], sched["stop_times"]).cache()
+    vstops = variant_stops(sched["trips"], sched["stop_times"])
 
     rt = spark.createDataFrame(
         build_rt_events(build_schedule(), n_feeds=4), RT_EVENTS)

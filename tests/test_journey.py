@@ -44,8 +44,6 @@ def world(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("gtfs_journey")
     write_gtfs_dir(build_schedule(), d)
     sched = read_gtfs(spark, str(d))
-    for k in sched:
-        sched[k] = sched[k].cache()
     # fixture variant 1 of R1: stops S1(seq1) S3(seq2) S5(seq4) …;
     # departure at boarding seq 1 (30 s delay), arrival at seq 2
     # (scheduled 2 min later, 90 s delay)

@@ -54,8 +54,6 @@ def world(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("gtfs_html")
     write_gtfs_dir(build_schedule(), d)
     sched = read_gtfs(spark, str(d))
-    for k in sched:
-        sched[k] = sched[k].cache()
     preds = spark.createDataFrame([
         _pred("S1", 1, 2, 30),           # departure at boarding stop
         _pred("S3", 2, 1, 120 + 90),     # arrival two stops later

@@ -8,7 +8,9 @@ import datetime as dt
 import pyspark.sql.functions as F
 import pytest
 
-from gtfs_fixtures import build_rt_events, build_schedule, write_gtfs_dir
+from gtfs_fixtures import (
+    build_rt_events, build_schedule, union_per_event_type, write_gtfs_dir,
+)
 
 
 @pytest.fixture(scope="module")
@@ -26,19 +28,33 @@ def world(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("gtfs_sched")
     write_gtfs_dir(build_schedule(), d)
     sched = read_gtfs(spark, str(d))
-    for k in sched:
-        sched[k] = sched[k].cache()
     rt = spark.createDataFrame(build_rt_events(build_schedule()), RT_EVENTS)
     records = latest_wins_merge(build_records(
-        rt, sched["trips"], sched["stop_times"], "test", "sched"))
-    vstops = variant_stops(sched["trips"], sched["stop_times"]).cache()
+        rt, sched["trips"], sched["stop_times"], "test", "sched")).cache()
+    vstops = variant_stops(sched["trips"], sched["stop_times"])
     items = prepare_dbitems(records, vstops).cache()
     tables = {
         "general": general_delay_curves(items).cache(),
         "specific": stop_pair_curve_sets(items).cache(),
         "default": default_curves(items, sched["routes"]).cache(),
     }
-    return {"sched": sched, "vstops": vstops, "tables": tables}
+    return {"sched": sched, "vstops": vstops, "tables": tables,
+            "records": records}
+
+
+@pytest.fixture(scope="module")
+def stored_tables(spark, world, tmp_path_factory):
+    """The curve tables as a refresh reads them (written, read back),
+    with every cached input of the prediction plans materialized."""
+    from dystonse_gtfs_importer_spark.sources.store import (
+        read_curve_tables, write_curve_tables,
+    )
+
+    base = str(tmp_path_factory.mktemp("stats"))
+    write_curve_tables(world["tables"], base)
+    for df in [*world["sched"].values(), world["vstops"], world["records"]]:
+        df.count()
+    return read_curve_tables(spark, base)
 
 
 class TestServiceDates:
@@ -126,3 +142,104 @@ class TestScheduledPredictions:
                     + F.col("trip_start_time") * F.expr("INTERVAL 1 SECOND"))
         overlap = second.where(start_ts < F.lit(hwm)).count()
         assert overlap == 0
+
+
+NOW = dt.datetime(2024, 1, 1, 9, 0)
+
+
+def _live(world, tables):
+    """The live predictions of a refresh, as ``import -p`` builds them."""
+    from dystonse_gtfs_importer_spark.plans import predict
+    from dystonse_gtfs_importer_spark.schemas import ORIGIN_REALTIME
+
+    sched = world["sched"]
+    basis = predict.realtime_basis(world["records"], world["vstops"], NOW)
+    lookups = predict.prediction_lookups(
+        basis, world["vstops"], sched["stop_times"], sched["routes"])
+    return predict.prediction_rows(
+        predict.predict(lookups, tables["specific"], tables["general"],
+                        tables["default"])
+        .where(F.col("prediction_curve").isNotNull()),
+        "test", "sched", ORIGIN_REALTIME)
+
+
+class TestRefreshPlans:
+    """The two prediction writes of a refresh: bounded jobs over the
+    cached schedule frames, and no Python-RDD scans."""
+
+    def test_scheduled_write_job_count(self, spark, world, stored_tables,
+                                       jobs, tmp_path):
+        from dystonse_gtfs_importer_spark.plans.scheduled import (
+            scheduled_predictions,
+        )
+        from dystonse_gtfs_importer_spark.sources.store import (
+            write_predictions,
+        )
+
+        with jobs() as n:
+            write_predictions(scheduled_predictions(
+                spark, world["sched"], world["vstops"], stored_tables, NOW),
+                str(tmp_path / "p"), mode="append")
+        assert 0 < n[0] <= 14, n
+
+    def test_live_write_job_count(self, world, stored_tables, jobs,
+                                  tmp_path):
+        from dystonse_gtfs_importer_spark.sources.store import (
+            write_predictions,
+        )
+
+        with jobs() as n:
+            write_predictions(_live(world, stored_tables),
+                              str(tmp_path / "p"), mode="append")
+        assert 0 < n[0] <= 15, n
+
+    def test_scheduled_plan_has_no_rdd_scan(self, spark, world,
+                                            stored_tables):
+        """The fixture feed has no calendar_dates.txt: the absent file
+        must not become a Python-RDD (ExistingRDD) scan."""
+        from dystonse_gtfs_importer_spark.plans.scheduled import (
+            scheduled_predictions,
+        )
+
+        preds = scheduled_predictions(
+            spark, world["sched"], world["vstops"], stored_tables, NOW)
+        plan = preds._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+
+    def test_stacked_lookups_equal_union(self, world):
+        """``prediction_lookups`` fans out over event types with one
+        ``stack``; its rows equal a union of one select per event type."""
+        from dystonse_gtfs_importer_spark.functions import sql_shared as S
+        from dystonse_gtfs_importer_spark.plans.predict import (
+            prediction_lookups, realtime_basis,
+        )
+
+        sched, vstops = world["sched"], world["vstops"]
+        basis = realtime_basis(world["records"], vstops, NOW)
+        got = prediction_lookups(basis, vstops, sched["stop_times"],
+                                 sched["routes"])
+        fan = (basis.join(sched["stop_times"].select(
+                   "trip_id", "stop_sequence", "stop_id",
+                   "arrival_secs", "departure_secs"), "trip_id")
+               .join(vstops.select("route_id", "route_variant",
+                                   "stop_sequence", "stop_index",
+                                   "stop_count"),
+                     ["route_id", "route_variant", "stop_sequence"])
+               .where(F.col("stop_index") > F.col("start_stop_index"))
+               .join(sched["routes"].select("route_id", "route_type"),
+                     "route_id"))
+        union = union_per_event_type(fan, fan.columns, {
+            "sched_event_secs": ("arrival_secs", "departure_secs")})
+        union = union.select(
+            "route_id", "route_variant", "trip_id", "trip_start_date",
+            "trip_start_time", "route_type", "stop_id", "stop_sequence",
+            "event_type",
+            F.expr(S.gtfs_noon_datetime("trip_start_date",
+                                        "sched_event_secs")).alias("event_dt"),
+            "sched_event_secs",
+            F.col("stop_index").alias("end_stop_index"),
+            "stop_count", "start_stop_index", "initial_delay")
+        assert got.columns == union.columns
+        assert got.count() > 0
+        assert got.exceptAll(union).count() == 0
+        assert union.exceptAll(got).count() == 0

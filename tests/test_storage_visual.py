@@ -28,7 +28,7 @@ def world(spark, tmp_path_factory):
     rt = spark.createDataFrame(build_rt_events(build_schedule()), RT_EVENTS)
     records = latest_wins_merge(build_records(
         rt, sched["trips"], sched["stop_times"], "test", "sched")).cache()
-    vstops = variant_stops(sched["trips"], sched["stop_times"]).cache()
+    vstops = variant_stops(sched["trips"], sched["stop_times"])
     return {"records": records, "vstops": vstops, "sched": sched}
 
 

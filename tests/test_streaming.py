@@ -46,8 +46,7 @@ class TestStreamingImport:
         g.mkdir()
         write_gtfs_dir(build_schedule(), g)
         sched = read_gtfs(spark, str(g))
-        trips = sched["trips"].cache()
-        stop_times = sched["stop_times"].cache()
+        trips, stop_times = sched["trips"], sched["stop_times"]
 
         rt = tmp_path / "rt"
         rt.mkdir()
@@ -94,8 +93,7 @@ class TestStreamingImport:
         g.mkdir()
         write_gtfs_dir(build_schedule(), g)
         sched = read_gtfs(spark, str(g))
-        trips = sched["trips"].cache()
-        stop_times = sched["stop_times"].cache()
+        trips, stop_times = sched["trips"], sched["stop_times"]
 
         rt = tmp_path / "rt"
         rt.mkdir()

@@ -32,7 +32,7 @@ spark = get_spark(app_name="journey")
 base = pathlib.Path(tempfile.mkdtemp())
 g = base/"gtfs"; g.mkdir(); write_gtfs_dir(build_schedule(), g)
 sched = read_gtfs(spark, str(g))
-vstops = variant_stops(sched["trips"], sched["stop_times"]).cache()
+vstops = variant_stops(sched["trips"], sched["stop_times"])
 
 rt_dir = base/"rt"; rt_dir.mkdir()
 pdfres = build_rt_events(build_schedule())
