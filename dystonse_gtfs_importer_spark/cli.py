@@ -405,9 +405,8 @@ def _append_predictions(preds, path: str) -> int:
 
 
 def cmd_import(spark, args) -> int:
-    from .plans.import_etl import build_records, latest_wins_merge
+    from .plans.import_etl import build_records
     from .sources.gtfs_rt import read_gtfs_rt
-    from .sources.store import write_records
 
     if not (args.record or args.predict or args.cleanup):
         raise SystemExit("import needs at least one of -r / -p / -c")
@@ -440,18 +439,19 @@ def cmd_import(spark, args) -> int:
         rt = read_gtfs_rt(spark, str(rt_dir))
 
     if args.record:
+        from .streaming.import_stream import merge_batch_overwrite
+
         recs = build_records(rt, sched["trips"], sched["stop_times"],
-                             args.source, sched_name)
-        existing = None
+                             args.source, sched_name).cache()
+        try:
+            merge_batch_overwrite(spark, recs, _records_dir(args),
+                                  args.source)
+        finally:
+            recs.unpersist()
         if Path(_records_dir(args)).exists():
-            existing = spark.read.parquet(_records_dir(args))
-        merged = latest_wins_merge(recs, existing=existing)
-        if existing is not None:
-            # detach from the files about to be overwritten
-            merged = merged.localCheckpoint(eager=True)
-        write_records(merged, _records_dir(args))
-        spark.catalog.refreshByPath(_records_dir(args))
-        _say(args, f"records table now {merged.count()} rows")
+            spark.catalog.refreshByPath(_records_dir(args))
+            _say(args, "records table now "
+                 f"{_written_count(spark, args.dir, 'records')} rows")
 
     if args.predict:
         from .plans.predict import (
@@ -474,6 +474,9 @@ def cmd_import(spark, args) -> int:
         _say(args, f"wrote {n} prediction rows")
 
     if args.cleanup:
+        import shutil
+
+        from .sources.store import write_predictions
         from .streaming.import_stream import (
             cleanup_predictions, remove_outdated_predictions,
         )
@@ -487,8 +490,11 @@ def cmd_import(spark, args) -> int:
                 window_end=now + dt.timedelta(hours=25))
             kept = cleanup_predictions(kept, now)
             # detach from the files about to be overwritten
-            kept = kept.localCheckpoint(eager=True)
-            kept.write.mode("overwrite").parquet(str(pdir))
+            write_predictions(kept.localCheckpoint(eager=True), str(pdir))
+            if not any(pdir.rglob("*.parquet")):
+                # no row kept: no file is left to read a schema from,
+                # so the table goes, as before the first predict
+                shutil.rmtree(pdir)
             _say(args, "cleanup done")
     return 0
 
@@ -502,9 +508,9 @@ def _csv_count(spark, path: str) -> int:
 
 
 def _written_count(spark, base: str, name: str) -> int:
-    """Row count of a just-written stats table, read back from the
-    parquet FOOTERS (a metadata-only job) instead of re-running the
-    curve pipeline that produced it — the ×1..×100 analyse wall was
+    """Row count of a just-written table (stats, records), read back
+    from the parquet FOOTERS (a metadata-only job) instead of re-running
+    the pipeline that produced it — the ×1..×100 analyse wall was
     dominated by count() reporting actions recomputing every stage
     (SCALING.md, round-7 ~70-job floor)."""
     return spark.read.parquet(f"{base}/{name}").count()

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BinaryType, DoubleType
+from pyspark.sql.types import DoubleType
 
 from .. import curves as cv
 from ..schemas import CURVE_TYPE
@@ -32,14 +32,6 @@ def curve_x_at_y(curve: pd.Series, y: pd.Series) -> pd.Series:
     return pd.Series([
         float(cv.x_at_y(c, yv)) if (c := _c(p)) is not None else None
         for p, yv in zip(curve, y)])
-
-
-@pandas_udf(CURVE_TYPE)
-def curve_simplify(curve: pd.Series, eps: pd.Series) -> pd.Series:
-    """A4: ε-simplification."""
-    return pd.Series([
-        cv.simplify(c, float(e)).points() if (c := _c(p)) is not None else None
-        for p, e in zip(curve, eps)])
 
 
 # ---------------------------------------------------------------------------
@@ -197,10 +189,3 @@ def transfer_probability(arr_curve: pd.Series, arr_ref_s: pd.Series,
             and ar is not None and dr is not None else None)
     return pd.Series(out)
 
-
-@pandas_udf(BinaryType())
-def curve_serialize_compact(curve: pd.Series) -> pd.Series:
-    """C10: ≤120-byte compact codec (JDBC/blob parity)."""
-    return pd.Series([
-        cv.serialize_compact(c) if (c := _c(p)) is not None else None
-        for p in curve])

@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import datetime as dt
 import logging
-import math
 import time
 
 import pyspark.sql.functions as F
@@ -22,7 +21,9 @@ from pyspark.sql import DataFrame
 
 from . import curves as cv
 from . import monitor_html as H
-from .plans.journey import _curve_and_ref, _epoch, journey_probabilities
+from .plans.journey import (
+    _curve_and_ref, _epoch, _haversine_m, journey_probabilities,
+)
 from .plans.monitor import (
     autocomplete_stops, departure_board, extended_stops,
     predictions_for_stop, predictions_for_trip, resolve_trip,
@@ -38,14 +39,6 @@ def _utc(epoch_s: int) -> dt.datetime:
     session-TZ-naive (tests pin the session to UTC)."""
     return dt.datetime.fromtimestamp(int(epoch_s),
                                      dt.timezone.utc).replace(tzinfo=None)
-
-
-def _haversine_m(lat1, lon1, lat2, lon2) -> float:
-    p1, p2 = math.radians(lat1), math.radians(lat2)
-    dp, dl = p2 - p1, math.radians(lon2 - lon1)
-    a = (math.sin(dp / 2) ** 2
-         + math.cos(p1) * math.cos(p2) * math.sin(dl / 2) ** 2)
-    return 2 * 6371000.0 * math.asin(math.sqrt(a))
 
 
 class MonitorApp:

@@ -1,18 +1,28 @@
 """Table storage (S12-S17): partitioned parquet replaces both the
 MySQL tables and the MessagePack object tree.
 
-Layout decisions for 100 TB:
+Each table has ONE writer here, and that writer owns the table's
+partitioning, sort order and overwrite mode; every other path (stream
+merge, CLI import and cleanup, compaction) calls it.  The overwrite
+mode rides on the writer (``.option("partitionOverwriteMode", …)``),
+never on the session conf.  Layout decisions for 100 TB:
 
-* ``records`` partitions by (source, trip_start_date): every analyse
-  query filters on source, and date partitions give both partition
-  pruning for incremental analyse runs and a natural retention unit.
-  Within a partition, files are sorted by (route_id, route_variant) so
-  route-sliced reads benefit from min/max row-group skipping.
+* ``records`` (:func:`write_records`) partitions by (source,
+  trip_start_date): every analyse query filters on source, and date
+  partitions give both partition pruning for incremental analyse runs
+  and a natural retention unit.  An overwrite is DYNAMIC: it replaces
+  only the partitions present in the frame.  Within a partition, files
+  are sorted by (route_id, route_variant, trip_id, stop_sequence) so
+  route-sliced reads benefit from min/max row-group skipping; the sort
+  key leads with the partition columns, so Spark's planned write keeps
+  it instead of replacing it with its own partition-column sort.
 * curve tables are schedule-bounded (≤ millions of rows, kilobytes per
   row) — plain parquet, sorted by their lookup key, no partitioning
   (small-files beat empty-partition sprawl).
-* ``predictions`` partitions by (source, trip_start_date) — the 12 h
-  TTL (ST5) becomes dropping whole date partitions.
+* ``predictions`` (:func:`write_predictions`) partitions by (source,
+  trip_start_date).  An overwrite is STATIC: the 12 h TTL cleanup (ST5)
+  rewrites the whole table with the rows it keeps, and the partitions
+  it emptied are dropped.
 * The reference's MessagePack tree (types/types.md:13-27) maps to the
   directory structure parquet partitioning already provides; S17 load
   is just ``spark.read.parquet``.
@@ -33,9 +43,12 @@ def write_records(records: DataFrame, path: str, mode: str = "overwrite"
                   ) -> None:
     (records
      .repartition("source", "trip_start_date")
-     .sortWithinPartitions("route_id", "route_variant", "trip_id",
-                           "stop_sequence")
+     # the partition columns lead, or the planned write replaces this
+     # sort with its own sort on them
+     .sortWithinPartitions("source", "trip_start_date", "route_id",
+                           "route_variant", "trip_id", "stop_sequence")
      .write.mode(mode)
+     .option("partitionOverwriteMode", "dynamic")
      .partitionBy("source", "trip_start_date")
      .parquet(path))
 
@@ -45,19 +58,18 @@ def read_records(spark: SparkSession, path: str) -> DataFrame:
 
 
 def compact_partitions(spark: SparkSession, path: str,
-                       partition_values: list[str] | None = None,
-                       target_rows_per_file: int = 5_000_000) -> int:
-    """Rewrite small-file partitions of the records table into few
-    sorted files — the maintenance job every micro-batch sink needs.
+                       partition_values: list[str] | None = None) -> int:
+    """Rewrite small-file partitions of the records table into one
+    sorted file each — the maintenance job every micro-batch sink
+    needs.
 
     Each streaming batch writes at least one file per touched
     ``(source, trip_start_date)`` partition, so a day accumulates
     O(batches) small files; scans then pay per-file open/footer cost
     and lose run-length locality.  Compaction reads ONLY the named
     ``trip_start_date`` partition values (partition-pruned scan;
-    default: all), re-sorts rows by the read pattern (route, variant,
-    trip, stop) and rewrites via dynamic partition overwrite — an
-    Iceberg/Delta ``rewrite_data_files`` on plain parquet.  Returns
+    default: all) and rewrites them through :func:`write_records` —
+    an Iceberg/Delta ``rewrite_data_files`` on plain parquet.  Returns
     the number of rows compacted.  Run it on CLOSED days only: the
     overwrite is not atomic for concurrent readers of that partition.
     """
@@ -67,20 +79,8 @@ def compact_partitions(spark: SparkSession, path: str,
     n = df.count()
     if n == 0:
         return 0
-    files_wanted = max(1, n // target_rows_per_file)
-    compacted = (
-        df.repartition(files_wanted, "source", "trip_start_date")
-        .sortWithinPartitions("route_id", "route_variant", "trip_id",
-                              "stop_sequence")
-        .localCheckpoint(eager=True))  # detach from files being replaced
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (compacted.write.mode("overwrite")
-         .partitionBy("source", "trip_start_date").parquet(path))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # detach from the files being replaced
+    write_records(df.localCheckpoint(eager=True), path)
     return n
 
 
@@ -140,6 +140,7 @@ def write_predictions(predictions: DataFrame, path: str,
     (predictions
      .repartition("source", "trip_start_date")
      .write.mode(mode)
+     .option("partitionOverwriteMode", "static")
      .partitionBy("source", "trip_start_date")
      .parquet(path))
 

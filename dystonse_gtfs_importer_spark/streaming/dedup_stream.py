@@ -723,7 +723,6 @@ def run_dedup_stream(
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         if blocklist:
             from ..functions.blocklist_sql import apply_blocklist
 
@@ -776,8 +775,9 @@ def run_dedup_stream(
         # tightens the guard fails loudly instead of silently.
         try:
             (final.withColumn("ingest_batch", F.lit(batch_id + offset))
-             .write.mode("overwrite").partitionBy("ingest_batch")
-             .parquet(docs_path))
+             .write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("ingest_batch").parquet(docs_path))
         finally:
             for c in caches:
                 c.unpersist()

@@ -154,15 +154,17 @@ class Pinger:
 
 def merge_batch_overwrite(spark: SparkSession, recs: DataFrame,
                           records_dir: str, source: str) -> bool:
-    """One partition-scoped latest-wins merge published via dynamic
-    partition overwrite — only the (source, trip_start_date)
-    partitions present in the batch are read back, merged, and
-    rewritten: O(touched partitions) per batch, not O(table).
-    Logically replay-idempotent (latest-wins over the same rows), but
-    NOT snapshot-atomic across partitions for concurrent readers."""
+    """One partition-scoped latest-wins merge published by
+    ``store.write_records`` (dynamic partition overwrite) — only the
+    (source, trip_start_date) partitions present in the batch are read
+    back, merged, and rewritten: O(touched partitions) per batch, not
+    O(table).  Logically replay-idempotent (latest-wins over the same
+    rows), but NOT snapshot-atomic across partitions for concurrent
+    readers."""
     from pathlib import Path
 
     from ..plans.import_etl import latest_wins_merge
+    from ..sources.store import write_records
 
     touched = [r.trip_start_date for r in
                recs.select("trip_start_date").distinct().collect()]
@@ -175,17 +177,7 @@ def merge_batch_overwrite(spark: SparkSession, recs: DataFrame,
             # partition-pruned scan: only touched partitions
             .where((F.col("source") == source)
                    & F.col("trip_start_date").isin(touched)))
-    merged = latest_wins_merge(recs, existing=existing)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (merged.repartition("source", "trip_start_date")
-         .write.mode("overwrite")
-         .partitionBy("source", "trip_start_date")
-         .parquet(records_dir))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    write_records(latest_wins_merge(recs, existing=existing), records_dir)
     return True
 
 

@@ -224,8 +224,6 @@ def run_media_dedup_stream(
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
-        s.conf.set("spark.sql.sources.partitionOverwriteMode",
-                   "dynamic")
         store = read_media_store(s, out_dir)
         based = annotate_media_batch(batch).cache()
         try:
@@ -234,8 +232,9 @@ def run_media_dedup_stream(
                                "left_anti")
             (final.withColumn("ingest_batch",
                               F.lit(batch_id + offset))
-             .write.mode("overwrite").partitionBy("ingest_batch")
-             .parquet(media_path))
+             .write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("ingest_batch").parquet(media_path))
         finally:
             based.unpersist()
 

@@ -142,8 +142,12 @@ class TestCli:
             assert cols[3].startswith("data:image/png;base64,")
 
     def test_08_import_cleanup(self, spark, lake):
+        """Every prediction in the lake is for a 2024-01-01 trip, more
+        than 12 h before now, so cleanup keeps no row and the table
+        goes, as before the first predict."""
+        assert spark.read.parquet(str(lake / "predictions")).count() > 0
         assert _run(spark, lake, "import", "-c", "batch") == 0
-        assert spark.read.parquet(str(lake / "predictions")).count() >= 0
+        assert not (lake / "predictions").exists()
 
     def test_09_analyse_incremental_day(self, spark, lake, capsys):
         assert _run(spark, lake, "analyse", "compute-curves",
@@ -153,11 +157,67 @@ class TestCli:
         assert (lake / "stats" / "basis" / "general").exists()
 
     def test_10_import_predict(self, spark, lake, capsys):
-        assert _run(spark, lake, "-v", "import", "-p", "batch") == 0
-        preds = spark.read.parquet(str(lake / "predictions"))
         from dystonse_gtfs_importer_spark.schemas import ORIGIN_REALTIME
+
+        assert _run(spark, lake, "-v", "import", "-p", "batch") == 0
+        n = _wrote(capsys, "prediction rows")
+        preds = spark.read.parquet(str(lake / "predictions"))
+        # cleanup emptied the table, so it holds only this append
         assert preds.where(
-            preds.origin_type == ORIGIN_REALTIME).count() >= 0
+            preds.origin_type == ORIGIN_REALTIME).count() == n > 0
+        assert preds.count() == n
+
+    def test_10b_cleanup_then_append_keeps_the_kept_rows(
+            self, spark, lake, capsys, monkeypatch, tmp_path):
+        """predict start → import -c → import -p: the table reads back
+        the rows cleanup kept plus the appended ones, and the
+        partitions cleanup emptied are gone, even when the session
+        conf makes partition overwrites dynamic."""
+        import datetime as dt
+        import shutil
+        import types
+
+        from dystonse_gtfs_importer_spark import cli
+        from dystonse_gtfs_importer_spark.streaming.import_stream import (
+            cleanup_predictions,
+        )
+
+        class Clock(dt.datetime):
+            @classmethod
+            def now(cls, tz=None):
+                return cls(2024, 1, 3, 8, 30)
+
+        monkeypatch.setattr(cli, "dt", types.SimpleNamespace(
+            datetime=Clock, timedelta=dt.timedelta))
+        fresh, pdir = tmp_path / "lake", tmp_path / "lake" / "predictions"
+        for d in ("schedules", "stats", "records", "rt"):
+            shutil.copytree(lake / d, fresh / d)
+        assert _run(spark, fresh, "predict", "start",
+                    "--now", "2024-01-01T08:30:00") == 0
+        before = spark.read.parquet(str(pdir)).localCheckpoint()
+        kept = cleanup_predictions(before, Clock.now())
+        dates = {r.trip_start_date for r in
+                 before.select("trip_start_date").distinct().collect()}
+        kept_dates = {r.trip_start_date for r in
+                      kept.select("trip_start_date").distinct().collect()}
+        n_kept = kept.count()
+        assert 0 < n_kept < before.count() and kept_dates < dates
+
+        key = "spark.sql.sources.partitionOverwriteMode"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "dynamic")
+        try:
+            assert _run(spark, fresh, "import", "-c", "batch") == 0
+        finally:
+            spark.conf.set(key, prev)
+        assert {p.name for p in (pdir / "source=vbn").iterdir()} == {
+            f"trip_start_date={d}" for d in kept_dates}
+
+        capsys.readouterr()
+        assert _run(spark, fresh, "-v", "import", "-p", "batch") == 0
+        n = _wrote(capsys, "prediction rows")
+        assert n > 0
+        assert spark.read.parquet(str(pdir)).count() == n_kept + n
 
     def test_11_analyse_draw_curves(self, spark, lake, capsys):
         assert _run(spark, lake, "analyse", "draw-curves",
@@ -201,6 +261,68 @@ class TestCli:
                     str(sched), str(rt_file)) == 0
 
 
+    def test_13b_import_batch_twice_is_latest_wins_over_both(
+            self, spark, lake, tmp_path):
+        """Two `import -r batch` runs equal one latest-wins merge over
+        both batches, and the second run leaves the files of the
+        partition it does not touch alone."""
+        import shutil
+
+        from dystonse_gtfs_importer_spark.plans.import_etl import (
+            build_records, latest_wins_merge,
+        )
+        from dystonse_gtfs_importer_spark.sources.gtfs import read_gtfs
+        from dystonse_gtfs_importer_spark.sources.gtfs_rt import (
+            read_gtfs_rt,
+        )
+
+        day1 = build_rt_events(build_schedule())
+        day2 = day1.assign(
+            start_date="20240102", header_timestamp=day1.header_timestamp
+            + 86400, feed_file="d2-" + day1.feed_file)
+        # later reports of day 2 with other delays supersede batch A's
+        day2b = day2.assign(
+            header_timestamp=day2.header_timestamp + 600,
+            arrival_delay=day2.arrival_delay + 30,
+            feed_file="d2b-" + day1.feed_file)
+        a, b, fresh = tmp_path / "a", tmp_path / "b", tmp_path / "lake"
+        for d, rows in ((a, pd.concat([day1, day2])), (b, day2b)):
+            (d / "rt").mkdir(parents=True)
+            _write_rt_files(rows, d / "rt")
+        shutil.copytree(lake / "schedules", fresh / "schedules")
+
+        def files(day):
+            part = (fresh / "records" / "source=vbn"
+                    / f"trip_start_date={day}")
+            return {(p.name, p.stat().st_mtime_ns)
+                    for p in part.glob("*.parquet")}
+
+        assert _run(spark, fresh, "import", "-r", "batch", str(a)) == 0
+        day1_files, day2_files = files("2024-01-01"), files("2024-01-02")
+        assert day1_files and day2_files
+        assert _run(spark, fresh, "import", "-r", "batch", str(b)) == 0
+        assert files("2024-01-01") == day1_files
+        assert files("2024-01-02") != day2_files
+
+        sched_dir = next((fresh / "schedules").iterdir())
+        sched = read_gtfs(spark, str(sched_dir))
+        rt = read_gtfs_rt(spark, str(a / "rt")).unionByName(
+            read_gtfs_rt(spark, str(b / "rt")))
+        want = latest_wins_merge(build_records(
+            rt, sched["trips"], sched["stop_times"], "vbn", sched_dir.name))
+        got = spark.read.parquet(str(fresh / "records"))
+        assert sorted(map(tuple, got.select(*want.columns).collect())) \
+            == sorted(map(tuple, want.collect()))
+
+
+def _wrote(capsys, what: str) -> int:
+    """The row count a verbose run printed as ``wrote <n> <what>``."""
+    import re
+
+    err = capsys.readouterr().err
+    return int(re.search(rf"wrote (\d+) {what}", err).group(1))
+
+
 class TestAppendPredictions:
     def test_counts_rows_written_including_none(self, spark, tmp_path):
         from dystonse_gtfs_importer_spark.cli import _append_predictions
@@ -237,10 +359,13 @@ class TestCorpusIngestCli:
         ]
         (src / "b0.json").write_text(
             "\n".join(_json.dumps(r) for r in rows))
+        key = "spark.sql.sources.partitionOverwriteMode"
+        spark.conf.set(key, "static")
         rc = main(["-s", "x", "--dir", str(tmp_path), "corpus",
                    "ingest", "--in", str(src),
                    "--blocklist", "bad phrase"], spark=spark)
         assert rc == 0
+        assert spark.conf.get(key) == "static"  # the sink leaks no conf
         acct = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         assert acct["corpus_docs"] == 2
         docs = spark.read.parquet(

@@ -1,5 +1,7 @@
-"""Small-file compaction (sources/store.py::compact_partitions):
-fewer files, identical rows, untouched partitions' files preserved."""
+"""The records writer (sources/store.py::write_records) and small-file
+compaction (compact_partitions): every path that writes records leaves
+sorted files; compaction leaves fewer files, identical rows, and
+untouched partitions' files preserved."""
 
 from __future__ import annotations
 
@@ -75,3 +77,63 @@ def test_compaction_scopes_to_named_partitions(spark, fragmented):
     assert untouched_before == untouched_after
     day1 = fragmented / "source=vbn" / "trip_start_date=2024-01-01"
     assert len(_data_files(day1)) < 24
+
+
+def _rewrite(spark, path: Path) -> Path:
+    from dystonse_gtfs_importer_spark.sources.store import write_records
+
+    out = path.with_name("rewritten")
+    write_records(spark.read.parquet(str(path)), str(out))
+    return out
+
+
+def _merge(spark, path: Path) -> Path:
+    import pyspark.sql.functions as F
+
+    from dystonse_gtfs_importer_spark.streaming.import_stream import (
+        merge_batch_overwrite,
+    )
+
+    # later reports of two trips on both days
+    batch = (spark.read.parquet(str(path))
+             .where(F.col("trip_id").isin("T1", "T4"))
+             .withColumn("time_of_recording",
+                         F.col("time_of_recording")
+                         + F.expr("INTERVAL 1 HOUR"))
+             .withColumn("delay_arrival", F.col("delay_arrival") + 30)
+             .localCheckpoint())
+    merge_batch_overwrite(spark, batch, str(path), "vbn")
+    return path
+
+
+def _compact(spark, path: Path) -> Path:
+    from dystonse_gtfs_importer_spark.sources.store import (
+        compact_partitions,
+    )
+
+    compact_partitions(spark, str(path))
+    return path
+
+
+@pytest.mark.parametrize("write", [_rewrite, _merge, _compact],
+                         ids=["write_records", "merge", "compact"])
+def test_records_files_sorted_by_route_trip_stop(spark, fragmented, write):
+    import pyarrow.parquet as pq
+
+    key = ["route_id", "route_variant", "trip_id", "stop_sequence"]
+    n = spark.read.parquet(str(fragmented)).count()
+    # keep every shuffle partition upstream of the write, as a larger
+    # table would: the files must be sorted however the rows arrive
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        out = write(spark, fragmented)
+    finally:
+        spark.conf.set(coalesce, prev)
+    files = _data_files(out)
+    assert files and spark.read.parquet(str(out)).count() == n
+    for f in files:
+        rows = pq.read_table(f, columns=key).to_pylist()
+        keys = [tuple(r[c] for c in key) for r in rows]
+        assert keys == sorted(keys), f
