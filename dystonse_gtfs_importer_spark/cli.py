@@ -450,8 +450,9 @@ def cmd_import(spark, args) -> int:
             recs.unpersist()
         if Path(_records_dir(args)).exists():
             spark.catalog.refreshByPath(_records_dir(args))
-            _say(args, "records table now "
-                 f"{_written_count(spark, args.dir, 'records')} rows")
+            if args.verbose:  # the count reads the whole table's footers
+                _say(args, "records table now "
+                     f"{_written_count(spark, args.dir, 'records')} rows")
 
     if args.predict:
         from .plans.predict import (
@@ -474,8 +475,6 @@ def cmd_import(spark, args) -> int:
         _say(args, f"wrote {n} prediction rows")
 
     if args.cleanup:
-        import shutil
-
         from .sources.store import write_predictions
         from .streaming.import_stream import (
             cleanup_predictions, remove_outdated_predictions,
@@ -491,10 +490,6 @@ def cmd_import(spark, args) -> int:
             kept = cleanup_predictions(kept, now)
             # detach from the files about to be overwritten
             write_predictions(kept.localCheckpoint(eager=True), str(pdir))
-            if not any(pdir.rglob("*.parquet")):
-                # no row kept: no file is left to read a schema from,
-                # so the table goes, as before the first predict
-                shutil.rmtree(pdir)
             _say(args, "cleanup done")
     return 0
 
@@ -743,8 +738,9 @@ def cmd_monitor(spark, args) -> int:
 
     if args.mmode == "serve":
         from .monitor_app import MonitorApp, serve_monitor
+        from .sources.store import read_predictions
 
-        preds = spark.read.parquet(str(Path(args.dir) / "predictions"))
+        preds = read_predictions(spark, str(Path(args.dir) / "predictions"))
         srv = serve_monitor(MonitorApp(sched, preds), port=args.port)
         print(f"Waiting for connections on 0.0.0.0:{args.port}…",
               file=sys.stderr)
@@ -754,8 +750,9 @@ def cmd_monitor(spark, args) -> int:
     from .plans.monitor import (
         departure_board, extended_stops, predictions_for_stop,
     )
+    from .sources.store import read_predictions
 
-    preds = spark.read.parquet(str(Path(args.dir) / "predictions"))
+    preds = read_predictions(spark, str(Path(args.dir) / "predictions"))
     when = dt.datetime.fromisoformat(args.when)
     until = when + dt.timedelta(hours=args.window_hours)
     ext = extended_stops(sched["stops"], args.stop_name)

@@ -22,7 +22,9 @@ never on the session conf.  Layout decisions for 100 TB:
 * ``predictions`` (:func:`write_predictions`) partitions by (source,
   trip_start_date).  An overwrite is STATIC: the 12 h TTL cleanup (ST5)
   rewrites the whole table with the rows it keeps, and the partitions
-  it emptied are dropped.
+  it emptied are dropped.  A write that leaves no data file (every
+  row cleaned up, or a first append of no rows) removes the table,
+  and :func:`read_predictions` reads an absent table as empty.
 * The reference's MessagePack tree (types/types.md:13-27) maps to the
   directory structure parquet partitioning already provides; S17 load
   is just ``spark.read.parquet``.
@@ -137,12 +139,31 @@ def read_curve_tables(spark: SparkSession, base: str) -> dict[str, DataFrame]:
 
 def write_predictions(predictions: DataFrame, path: str,
                       mode: str = "overwrite") -> None:
+    import shutil
+    from pathlib import Path
+
     (predictions
      .repartition("source", "trip_start_date")
      .write.mode(mode)
      .option("partitionOverwriteMode", "static")
      .partitionBy("source", "trip_start_date")
      .parquet(path))
+    # a partitioned write of no rows leaves only _SUCCESS, which no
+    # reader can infer a schema from: an empty table is an absent one
+    if not any(Path(path).rglob("*.parquet")):
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def read_predictions(spark: SparkSession, path: str) -> DataFrame:
+    """The predictions table, or an empty frame of its schema where
+    the table is absent (never written, or left with no row)."""
+    from pathlib import Path
+
+    from ..schemas import PREDICTIONS
+
+    if not Path(path).exists():
+        return spark.createDataFrame([], PREDICTIONS)
+    return spark.read.parquet(path)
 
 
 def retry_with_backoff(fn, retries: int = 5, base_sleep_s: float = 5.0,

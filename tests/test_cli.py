@@ -149,6 +149,40 @@ class TestCli:
         assert _run(spark, lake, "import", "-c", "batch") == 0
         assert not (lake / "predictions").exists()
 
+    def test_08b_zero_row_writes_leave_a_readable_lake(
+            self, spark, lake, capsys, monkeypatch):
+        """After a cleanup that kept nothing, an `import -p` and a
+        `predict start` that write no row leave no table behind, and
+        `monitor` shows an empty board instead of failing."""
+        import datetime as dt
+        import types
+
+        from dystonse_gtfs_importer_spark import cli
+
+        class Clock(dt.datetime):
+            @classmethod
+            def now(cls, tz=None):  # before every departure: no basis
+                return cls(2023, 12, 31, 8, 0)
+
+        capsys.readouterr()
+        with monkeypatch.context() as m:
+            m.setattr(cli, "dt", types.SimpleNamespace(
+                datetime=Clock, timedelta=dt.timedelta))
+            assert _run(spark, lake, "-v", "import", "-p", "batch") == 0
+        assert _wrote(capsys, "prediction rows") == 0
+        assert not (lake / "predictions").exists()
+
+        assert _run(spark, lake, "predict", "start",
+                    "--now", "2023-06-01T08:00:00") == 0
+        assert "wrote 0 scheduled" in capsys.readouterr().out
+        assert not (lake / "predictions").exists()
+
+        assert _run(spark, lake, "monitor", "board",
+                    "--stop-name", "Stop 3",
+                    "--when", "2024-01-01T08:00:00",
+                    "--window-hours", "6") == 0
+        assert capsys.readouterr().out.strip() == ""
+
     def test_09_analyse_incremental_day(self, spark, lake, capsys):
         assert _run(spark, lake, "analyse", "compute-curves",
                     "--incremental-day", "2024-01-01") == 0
@@ -331,6 +365,7 @@ class TestAppendPredictions:
         path = str(tmp_path / "predictions")
         empty = spark.createDataFrame([], schema)
         assert _append_predictions(empty, path) == 0
+        assert not (tmp_path / "predictions").exists()  # no table, no dir
         rows = spark.createDataFrame(
             [("s", "2024-01-01", i) for i in range(3)], schema)
         assert _append_predictions(rows, path) == 3
