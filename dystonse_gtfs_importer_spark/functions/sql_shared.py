@@ -461,10 +461,14 @@ def haversine_m(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
 
 
 def gtfs_noon_datetime(service_date: str, seconds: str) -> str:
-    """GTFS rule: event time = service_day@12:00 + (seconds - 12h),
-    which is DST-safe for times past midnight (up to 27:00:00+)."""
+    """GTFS rule (C1/C2): event time = service_day@12:00 local +
+    (seconds - 12h).  Anchoring at local noon, not midnight + 12
+    physical hours, keeps the wall time right on DST-transition days;
+    seconds past 24:00 carry into the next day.  The one derivation of
+    "service date + seconds → instant" every path uses."""
     return (
-        f"(CAST({service_date} AS TIMESTAMP) + INTERVAL 12 HOUR "
+        f"(make_timestamp(year({service_date}), month({service_date}), "
+        f"day({service_date}), 12, 0, 0) "
         f"+ (({seconds}) - 43200) * INTERVAL 1 SECOND)"
     )
 

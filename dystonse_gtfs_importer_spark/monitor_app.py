@@ -21,15 +21,15 @@ from pyspark.sql import DataFrame
 
 from . import curves as cv
 from . import monitor_html as H
-from .plans.journey import (
-    _curve_and_ref, _epoch, _haversine_m, journey_probabilities,
-)
-from .plans.monitor import (
-    autocomplete_stops, departure_board, extended_stops,
-    predictions_for_stop, predictions_for_trip, resolve_trip,
+from .plans.journey import _curve_and_ref, _haversine_m, journey_probabilities
+# resolve_trip runs inside journey_probabilities; it stays importable
+# here, where perfbench/spans.py wraps the monitor's layer functions
+from .plans.monitor import (  # noqa: F401
+    autocomplete_stops, departure_board, predictions_for_stop,
+    predictions_for_trip, resolve_trip,
 )
 from .rendering import heat_strip_data_url
-from .schemas import EVENT_ARRIVAL, EVENT_DEPARTURE
+from .schemas import EVENT_ARRIVAL
 
 log = logging.getLogger(__name__)
 
@@ -218,40 +218,18 @@ class MonitorApp:
     def trip_page(self, start_dt: dt.datetime, components: list) -> str:
         desc = components[-1]
         legs, state = journey_probabilities(
-            self.schedule, self.predictions, components[:-1], start_dt,
+            self.schedule, self.predictions, components, start_dt,
             return_state=True)
-        boarding_ids = [r.stop_id for r in state["ext_rows"]]
-        cand = resolve_trip(
-            self.schedule, desc["route_type"], desc["route_short_name"],
-            desc["headsign"], desc["departure_hhmm"], boarding_ids,
-            start_dt.date()).first()
-        if cand is None:
-            raise LookupError(f"trip not found: {desc!r}")
-
-        first_dep = (self.schedule["stop_times"]
-                     .where(F.col("trip_id") == cand.trip_id)
-                     .agg(F.min(F.struct("stop_sequence",
-                                         "departure_secs")).alias("f"))
-                     .first().f.departure_secs)
-        vehicle_preds = predictions_for_trip(
-            self.predictions, cand.trip_id, cand.trip_start_date,
-            int(first_dep), cand.stop_sequence)
-        dep_row = (vehicle_preds
-                   .where((F.col("event_type") == EVENT_DEPARTURE)
-                          & (F.col("stop_sequence") == cand.stop_sequence))
-                   .first())
-        if dep_row is None:
-            raise LookupError("no departure prediction at the boarding "
-                              f"stop for trip {cand.trip_id}")
-        arrivals = (vehicle_preds
-                    .where((F.col("event_type") == EVENT_ARRIVAL)
-                           & (F.col("stop_sequence") > cand.stop_sequence))
-                    .collect())
-
-        dep_curve, dep_ref = _curve_and_ref(dep_row)
-        p_board = cv.transfer_probability(
-            state["curve"], state["ref_s"], dep_curve, dep_ref)
-        start_prob = state["prob"] * p_board
+        trip = state["trip"]
+        boarding_seq, dep_row = trip["boarding_seq"], trip["departure_row"]
+        dep_curve, dep_ref = state["curve"], state["ref_s"]
+        start_prob = state["prob"]
+        arrivals = (predictions_for_trip(
+            self.predictions, trip["trip_id"], trip["trip_start_date"],
+            trip["trip_start_time"], boarding_seq)
+            .where((F.col("event_type") == EVENT_ARRIVAL)
+                   & (F.col("stop_sequence") > boarding_seq))
+            .collect())
 
         t01 = dep_ref + int(cv.x_at_y(dep_curve, 0.01))
         arr_by_seq = {}
@@ -265,9 +243,8 @@ class MonitorApp:
         # only this trip's stop rows cross the driver boundary (the
         # stops dimension joins in before the collect)
         stop_times = (self.schedule["stop_times"]
-                      .where((F.col("trip_id") == cand.trip_id)
-                             & (F.col("stop_sequence")
-                                >= cand.stop_sequence))
+                      .where((F.col("trip_id") == trip["trip_id"])
+                             & (F.col("stop_sequence") >= boarding_seq))
                       .join(F.broadcast(self.schedule["stops"]
                                         .select("stop_id", "stop_name")),
                             "stop_id", "left")
@@ -289,7 +266,7 @@ class MonitorApp:
         rows_html = []
         for st in stop_times:
             name = st.stop_name or st.stop_id
-            if st.stop_sequence == cand.stop_sequence:
+            if st.stop_sequence == boarding_seq:
                 rows_html.append(H.trip_stop_row_html(
                     name, row_dict(dep_row, dep_curve, dep_ref),
                     lo_s, hi_s, arrival=False,

@@ -65,12 +65,10 @@ def prepare_dbitems(records: DataFrame, vstops: DataFrame) -> DataFrame:
         "route_id", "route_variant", "stop_id", "stop_index", "stop_count",
         "arrival_secs", "departure_secs"))
     r = records.join(v, ["route_id", "route_variant", "stop_id"])
-    base = F.unix_timestamp(
-        F.to_timestamp("trip_start_date") + F.expr("INTERVAL 12 HOURS"))
     for et, secs in (("arrival", "arrival_secs"),
                      ("departure", "departure_secs")):
         r = r.withColumn(
-            f"dt_{et}", F.timestamp_seconds(base + F.col(secs) - 43200))
+            f"dt_{et}", F.expr(S.gtfs_noon_datetime("trip_start_date", secs)))
         r = r.withColumn(
             f"slot_{et}", F.expr(S.time_slot_id(f"dt_{et}", S.SPARK)))
     return r

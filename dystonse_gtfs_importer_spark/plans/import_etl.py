@@ -7,7 +7,6 @@ one declarative pipeline:
 * J2 stop_times match  join on (trip_id, stop_sequence)          :386-393
 * F4 null-delay skip   at least one delay present                :375-384
 * C3 trip descriptor   start_date yyyyMMdd + H:MM:SS → (date, s) gtfs_time.rs:22-46
-* event-time math      schedule/estimate epochs                  :368-402
 * W2 latest-wins       newest time_of_recording per PK           :406-421
 
 The rayon thread pools over files/entities become partition
@@ -117,23 +116,3 @@ def latest_wins_merge(records: DataFrame,
         .drop("__rn")
     )
 
-
-def event_times(records: DataFrame, stop_times: DataFrame) -> DataFrame:
-    """EventTimes math (:368-402): absolute schedule/estimate epochs
-    per event, via the DST-safe noon-anchored GTFS datetime rule
-    (gtfs_time.rs:53-56).  Pure column arithmetic — stays in codegen."""
-    st = stop_times.select(
-        "trip_id", "stop_sequence",
-        F.col("arrival_secs").alias("sched_arrival_secs"),
-        F.col("departure_secs").alias("sched_departure_secs"),
-    )
-    base = (
-        F.to_timestamp("trip_start_date") + F.expr("INTERVAL 12 HOURS")
-    )
-    r = records.join(F.broadcast(st), ["trip_id", "stop_sequence"], "left")
-    for et, secs in (("arrival", "sched_arrival_secs"),
-                     ("departure", "sched_departure_secs")):
-        sched = F.unix_timestamp(base) + F.col(secs) - F.lit(43200)
-        r = r.withColumn(f"schedule_{et}", sched).withColumn(
-            f"estimate_{et}", sched + F.col(f"delay_{et}"))
-    return r

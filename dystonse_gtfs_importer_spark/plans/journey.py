@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 
 from .. import curves as cv
 from .monitor import extended_stops, predictions_for_trip, resolve_trip
+from .scheduled import first_departure_secs
 
 
 def _haversine_m(lat1, lon1, lat2, lon2) -> float:
@@ -90,7 +91,10 @@ def journey_probabilities(
     the monitor HTML layer renders from (StopData in the reference):
     the arrival CDF + absolute anchor, the accumulated probability, the
     final stop's extended platform rows, and how the traveller got
-    there (walk distance / boarded trip) for the board's first line."""
+    there (walk distance / boarded trip) for the board's first line.
+    When the journey ends on a trip, ``trip`` holds the boarded vehicle
+    (trip_id, trip_start_date, trip_start_time, boarding_seq) and its
+    boarding ``departure_row``; otherwise it is None."""
     stops_df = schedule["stops"]
 
     legs: list[dict] = []
@@ -186,9 +190,7 @@ def journey_probabilities(
             first_dep = (
                 schedule["stop_times"]
                 .where(F.col("trip_id") == cand.trip_id)
-                .agg(F.min(F.struct("stop_sequence", "departure_secs"))
-                     .alias("f"))
-                .first().f.departure_secs)
+                .agg(first_departure_secs().alias("t")).first().t)
             dep = (predictions_for_trip(
                 predictions, cand.trip_id, cand.trip_start_date,
                 first_dep, cand.stop_sequence)
@@ -211,6 +213,7 @@ def journey_probabilities(
                 "trip_start_date": cand.trip_start_date,
                 "trip_start_time": int(first_dep),
                 "boarding_seq": cand.stop_sequence,
+                "departure_row": dep,
             }
             record("trip",
                    f"{desc['route_short_name']} nach {desc['headsign']}",
@@ -220,6 +223,6 @@ def journey_probabilities(
         return legs, {
             "curve": curve, "ref_s": ref_s, "prob": prob,
             "ext_rows": ext_rows, "last_walk_m": last_walk_m,
-            "last_arrival_row": last_arrival_row,
+            "last_arrival_row": last_arrival_row, "trip": last_trip,
         }
     return legs

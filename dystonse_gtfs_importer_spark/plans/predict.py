@@ -38,6 +38,7 @@ from pyspark.sql.types import DoubleType, MapType
 
 from .. import curves as cv
 from ..functions import sql_shared as S
+from ..functions.curve_udfs import curve_x_at_y_expr, interp_curve_set_expr
 from ..schemas import CURVE_TYPE
 
 _CS_TYPE = "array<struct<focus:float,curve:array<struct<x:float,y:float>>>>"
@@ -77,7 +78,6 @@ def predict(
     specific_sets: DataFrame,
     general_delay: DataFrame,
     default_curves: DataFrame,
-    use_jvm_interp: bool = True,
 ) -> DataFrame:
     """Attach the best available curve + precision_type to each lookup.
 
@@ -128,18 +128,14 @@ def predict(
         "left")
     # C9 interpolation: the JVM Column twin keeps the whole ladder
     # Python-free (no Arrow transfer of every curve set per lookup
-    # batch); the pandas kernel stays as the reference implementation,
-    # parity-tested in tests/test_predict.py
-    if use_jvm_interp:
-        from ..functions.curve_udfs import interp_curve_set_expr
-
-        interp = interp_curve_set_expr
-    else:
-        interp = _interp_curve_set
+    # batch); the pandas kernel ``_interp_curve_set`` stays as the
+    # reference implementation, parity-tested in tests/test_predict.py
     q = q.withColumn(
-        "r1_curve", interp(F.col("r1_curve_set"), F.col("initial_delay"))
+        "r1_curve",
+        interp_curve_set_expr(F.col("r1_curve_set"), F.col("initial_delay"))
     ).withColumn(
-        "r2_curve", interp(F.col("r2_curve_set"), F.col("initial_delay"))
+        "r2_curve",
+        interp_curve_set_expr(F.col("r2_curve_set"), F.col("initial_delay"))
     )
 
     # rung 3: SemiSpecific — DEFAULT-slot general_delay at the end stop,
@@ -229,9 +225,8 @@ def realtime_basis(records: DataFrame, vstops: DataFrame, now) -> DataFrame:
     # — otherwise a null-delay row can win the window and silently
     # demote the lookup from Specific to SemiSpecific
     r = r.where(F.col("delay_departure").isNotNull())
-    est_dep = (
-        F.unix_timestamp(F.to_timestamp("trip_start_date"))
-        + F.col("departure_secs") + F.col("delay_departure"))
+    est_dep = F.unix_timestamp(F.expr(S.gtfs_noon_datetime(
+        "trip_start_date", "departure_secs + delay_departure")))
     past = r.where(est_dep < F.unix_timestamp(F.lit(now)))
     w = (Window.partitionBy("route_id", "route_variant", "trip_id",
                             "trip_start_date", "trip_start_time")
@@ -250,16 +245,18 @@ def realtime_basis(records: DataFrame, vstops: DataFrame, now) -> DataFrame:
 def prediction_lookups(basis: DataFrame, vstops: DataFrame,
                        stop_times: DataFrame, routes: DataFrame
                        ) -> DataFrame:
-    """Fan a realtime PredictionBasis out to every UPCOMING stop event
-    of its vehicle — the lookup rows ``predict()`` consumes (the
-    make_prediction loop over the trip's stop_times from the current
-    position, per_schedule_importer.rs:240-330).
+    """Fan vehicles out to every UPCOMING stop event — the lookup rows
+    ``predict()`` consumes (the make_prediction loop over the trip's
+    stop_times from the current position, per_schedule_importer.rs:240-330).
 
-    Event seconds come from the trip's OWN stop_times; ``vstops``
-    supplies only the variant geometry (stop_index / stop_count).  All
-    joins are broadcast — the basis stream is the fact side."""
-    from ..functions import sql_shared as S
-
+    ``basis`` holds one row per vehicle with its realtime
+    PredictionBasis (``start_stop_index``, ``initial_delay``); a vehicle
+    without one (both NULL, as every schedule-origin vehicle) has every
+    stop upcoming.  Event seconds come from the trip's OWN stop_times
+    (the reference iterates trip.stop_times) — ``vstops`` carries the
+    representative trip's times and supplies only the variant geometry
+    (stop_index / stop_count).  All joins are broadcast — the vehicle
+    stream is the fact side."""
     vehicle = ["route_id", "route_variant", "trip_id",
                "trip_start_date", "trip_start_time"]
     own_st = F.broadcast(stop_times.select(
@@ -270,7 +267,8 @@ def prediction_lookups(basis: DataFrame, vstops: DataFrame,
         "stop_index", "stop_count"))
     fan = (basis.join(own_st, "trip_id")
            .join(vs, ["route_id", "route_variant", "stop_sequence"])
-           .where(F.col("stop_index") > F.col("start_stop_index"))
+           .where(F.col("start_stop_index").isNull()
+                  | (F.col("stop_index") > F.col("start_stop_index")))
            .join(F.broadcast(routes.select("route_id", "route_type")),
                  "route_id"))
     # one row per stop × event type, fanned out after the joins
@@ -296,9 +294,6 @@ def prediction_rows(predicted: DataFrame, source: str,
     route_id, stop_id, stop_sequence, event_type, sched_event_secs,
     prediction_curve, precision_type, sample_size.
     """
-    from ..functions import sql_shared as S
-    from ..functions.curve_udfs import curve_x_at_y_expr
-
     min_x = curve_x_at_y_expr(F.col("prediction_curve"), F.lit(0.0))
     max_x = curve_x_at_y_expr(F.col("prediction_curve"), F.lit(1.0))
     # anchor through the C1 noon rule (service_day@12:00 + secs − 12 h)

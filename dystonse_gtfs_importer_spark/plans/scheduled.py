@@ -14,9 +14,9 @@ Here the whole window is one declarative job:
 * trips_for_date: calendar weekday flags + validity range;
 * high-water-mark resume (A10, :304-336): ``resume_point`` scans the
   existing predictions table for the max schedule-origin trip start;
-* the lookup fan-out (trip × stop × event type) feeds the same
-  ``predict()`` ladder the realtime path uses, then
-  ``prediction_rows(origin=Schedule)``.
+* the lookup fan-out (trip × stop × event type) is the realtime path's
+  ``prediction_lookups`` with no basis, feeding the same ``predict()``
+  ladder, then ``prediction_rows(origin=Schedule)``.
 
 The ≥6-min/≥1000-trip batching and 20-min buffer-full backoff are
 driver-loop pacing around this job, not data semantics.
@@ -27,7 +27,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from ..functions import sql_shared as SQL
 from ..schemas import ORIGIN_SCHEDULE
@@ -80,6 +80,13 @@ def service_dates(spark, calendar: DataFrame,
             .unionByName(added).distinct())
 
 
+def first_departure_secs() -> Column:
+    """Aggregate: a trip's start, the departure seconds at its lowest
+    stop_sequence — the ``trip_start_time`` vehicles are keyed by."""
+    return F.min(F.struct("stop_sequence", "departure_secs"))[
+        "departure_secs"]
+
+
 def scheduled_trip_starts(spark, trips: DataFrame, stop_times: DataFrame,
                           calendar: DataFrame,
                           from_ts: dt.datetime, to_ts: dt.datetime,
@@ -87,19 +94,15 @@ def scheduled_trip_starts(spark, trips: DataFrame, stop_times: DataFrame,
     """Vehicles (trip × service day) whose start falls in [from_ts,
     to_ts): the candidate set for schedule-origin predictions.
     Includes yesterday's service day for past-24:00 starts (U1)."""
-    first_dep = (
-        stop_times.groupBy("trip_id")
-        .agg(F.min(F.struct("stop_sequence", "departure_secs")).alias("f"))
-        .select("trip_id", F.col("f.departure_secs").alias("trip_start_time"))
-    )
+    first_dep = stop_times.groupBy("trip_id").agg(
+        first_departure_secs().alias("trip_start_time"))
     dates = service_dates(spark, calendar,
                           from_ts.date() - dt.timedelta(days=1),
                           to_ts.date(), calendar_dates)
     cand = (
         trips.join(F.broadcast(dates), "service_id")
         .join(F.broadcast(first_dep), "trip_id")
-        # C1 noon rule — the one DST-safe schedule-datetime derivation
-        # shared with prediction_rows/event_times
+        # the C1 noon rule, as every schedule-datetime derivation
         .withColumn(
             "start_ts",
             F.expr(SQL.gtfs_noon_datetime("service_date",
@@ -139,46 +142,20 @@ def scheduled_predictions(
     schedule_file_name: str = "schedule",
 ) -> DataFrame:
     """The full ST4 job: window → lookups → ladder → prediction rows."""
-    from .predict import predict, prediction_rows
+    from .predict import predict, prediction_lookups, prediction_rows
 
     start = resume_point(existing_predictions) or now
     end = now + PREDICTION_BUFFER
     vehicles = scheduled_trip_starts(
         spark, schedule["trips"], schedule["stop_times"],
         schedule["calendar"], start, end,
-        schedule.get("calendar_dates"))
-
-    routes = F.broadcast(schedule["routes"].select("route_id", "route_type"))
-    # event SECONDS must come from the trip's OWN stop_times (the
-    # reference iterates trip.stop_times,
-    # scheduled_predictions_importer.rs save path) — vstops carries the
-    # representative trip's absolute times, which would shift every
-    # other trip of the variant by its start-time difference; vstops
-    # supplies only the variant geometry (stop_index / stop_count)
-    own_st = F.broadcast(schedule["stop_times"].select(
-        "trip_id", "stop_sequence", "stop_id",
-        "arrival_secs", "departure_secs"))
-    vs = F.broadcast(vstops.select(
-        "route_id", "route_variant", "stop_sequence",
-        "stop_index", "stop_count"))
-
-    # one row per stop × event type, fanned out after the joins
-    lookups = (vehicles.join(routes, "route_id")
-               .join(own_st, "trip_id")
-               .join(vs, ["route_id", "route_variant", "stop_sequence"])
-               .select("*", F.expr(SQL.event_type_stack(
-                   {"sched_event_secs": ("arrival_secs", "departure_secs")})))
-               .select(
-                   "route_id", "route_variant", "route_type",
-                   "trip_id", "trip_start_date", "trip_start_time",
-                   "stop_id", "stop_sequence", "event_type",
-                   F.expr(SQL.gtfs_noon_datetime("trip_start_date",
-                                                 "sched_event_secs"))
-                    .alias("event_dt"),
-                   "sched_event_secs",
-                   F.col("stop_index").alias("end_stop_index"),
-                   "stop_count"))
-
+        schedule.get("calendar_dates")).select(
+            "route_id", "route_variant", "trip_id", "trip_start_date",
+            "trip_start_time",
+            F.lit(None).cast("int").alias("start_stop_index"),
+            F.lit(None).cast("double").alias("initial_delay"))
+    lookups = prediction_lookups(vehicles, vstops, schedule["stop_times"],
+                                 schedule["routes"])
     predicted = predict(lookups, curve_tables["specific"],
                         curve_tables["general"], curve_tables["default"])
     predicted = predicted.where(F.col("prediction_curve").isNotNull())

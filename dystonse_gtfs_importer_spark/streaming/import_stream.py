@@ -26,6 +26,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions import sql_shared as SQL
 from ..schemas import ORIGIN_SCHEDULE, RT_EVENTS
 from ..sources.gtfs_rt import decode_partition
 
@@ -225,6 +226,12 @@ def run_import_stream(
     return writer.start()
 
 
+def _trip_start_s():
+    """Epoch seconds of a prediction row's trip start (C1 noon rule)."""
+    return F.unix_timestamp(F.expr(SQL.gtfs_noon_datetime(
+        "trip_start_date", "trip_start_time")))
+
+
 def remove_outdated_predictions(predictions: DataFrame, source: str,
                                 current_schedule: str,
                                 window_end) -> DataFrame:
@@ -236,14 +243,11 @@ def remove_outdated_predictions(predictions: DataFrame, source: str,
     ``source = :source AND trip_start < :end AND schedule_file_name !=
     :current AND origin_type = Schedule``).  Realtime-origin rows and
     other sources are never touched."""
-    trip_start = (
-        F.unix_timestamp(F.to_timestamp("trip_start_date"))
-        + F.col("trip_start_time"))
     outdated = (
         (F.col("source") == source)
         & (F.col("origin_type") == ORIGIN_SCHEDULE)
         & (F.col("schedule_file_name") != current_schedule)
-        & (trip_start < F.unix_timestamp(F.lit(window_end)))
+        & (_trip_start_s() < F.unix_timestamp(F.lit(window_end)))
     )
     return predictions.where(~outdated)
 
@@ -253,9 +257,5 @@ def cleanup_predictions(predictions: DataFrame, now_ts,
     """ST5/S14: retain only predictions whose trip started less than
     ``max_age_hours`` before ``now_ts`` (run_cleanup,
     importer/mod.rs:174-223) — the anti-filter rewrite of DELETE."""
-    start_ts = (
-        F.unix_timestamp(F.to_timestamp("trip_start_date"))
-        + F.col("trip_start_time")
-    )
     cutoff = F.unix_timestamp(F.lit(now_ts)) - max_age_hours * 3600
-    return predictions.where(start_ts >= cutoff)
+    return predictions.where(_trip_start_s() >= cutoff)

@@ -291,6 +291,15 @@ class TestTripPage:
         # boarding row carries the running probability
         assert re.search(r'class="area prob">\d+ %', page)
 
+    def test_spark_jobs_per_trip_page(self, app, jobs):
+        """The journey leg resolves the trip and reads its departure
+        row; the page adds only the arrivals and the trip's stop rows.
+        Pinned at the count before the page shared the journey's
+        boarding leg (24-25 jobs here)."""
+        with jobs() as n:
+            app.trip_page(START_DT, ["Stop 0", TRIP_DESC])
+        assert 0 < n[0] <= 25
+
 
 class TestDispatch:
     def test_routes(self, app):

@@ -189,13 +189,3 @@ class TestJvmInterpTwin:
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "ArrowEvalPython" not in plan
         assert "BatchEvalPython" not in plan
-
-    def test_pandas_path_still_selectable(self, spark, curve_tables):
-        from dystonse_gtfs_importer_spark.plans.predict import predict
-
-        q = _lookups(spark, [("A", 1, 3, 1, MON_10, 2, 8, 0, 60.0)])
-        out = predict(q, curve_tables["specific"],
-                      curve_tables["general"], curve_tables["default"],
-                      use_jvm_interp=False)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" in plan

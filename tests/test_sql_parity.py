@@ -5,9 +5,11 @@ This is what makes the DuckDB oracle a valid referee for the engine."""
 from __future__ import annotations
 
 import datetime as dt
+from pathlib import Path
 
 import duckdb
 import pandas as pd
+import pyspark.sql.functions as F
 import pytest
 
 from dystonse_gtfs_importer_spark.functions import sql_shared as S
@@ -127,6 +129,142 @@ class TestGtfsNoonDatetime:
         assert a[0] == "2024-03-30 00:00:00"
         assert a[2] == "2024-03-31 00:00:00"   # 24:00 → next day
         assert a[3] == "2024-03-31 03:00:00"   # 27:00 → 03:00 next day
+
+
+# Europe/Berlin's 2024 DST transitions: clocks go forward at 02:00 on
+# the first day and back at 03:00 on the second
+DST_DAYS = ("2024-03-31", "2024-10-27")
+EIGHT_AM = 8 * 3600
+
+
+@pytest.fixture
+def berlin(spark):
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "Europe/Berlin")
+    yield spark
+    spark.conf.set(key, prev)
+
+
+def _wall(day: str, hms: str):
+    """A session-TZ wall time as a timestamp Column."""
+    return F.to_timestamp(F.lit(f"{day} {hms}"))
+
+
+def _strings(df, col: str) -> list[str]:
+    return [r[0] for r in df.select(F.col(col).cast("string")).collect()]
+
+
+@pytest.mark.parametrize("day", DST_DAYS)
+class TestScheduleTimesOnDstDays:
+    """Every path that turns (service date, seconds) into an instant
+    reads an 08:00:00 trip as 08:00 wall time on a DST-transition day
+    (the C1 rule anchors at local noon, not midnight + 12 h)."""
+
+    def test_prediction_rows(self, berlin, day):
+        from dystonse_gtfs_importer_spark.plans.predict import prediction_rows
+
+        predicted = berlin.createDataFrame(
+            [("T", dt.date.fromisoformat(day), EIGHT_AM, "R", "S", 1, 2,
+              EIGHT_AM, [(0.0, 0.0), (60.0, 1.0)], 1, 30)],
+            "trip_id string, trip_start_date date, trip_start_time int, "
+            "route_id string, stop_id string, stop_sequence int, "
+            "event_type tinyint, sched_event_secs int, "
+            "prediction_curve array<struct<x:float,y:float>>, "
+            "precision_type tinyint, sample_size int")
+        rows = prediction_rows(predicted, "src", "sched", 2)
+        assert _strings(rows, "prediction_min") == [f"{day} 08:00:00"]
+        assert _strings(rows, "prediction_max") == [f"{day} 08:01:00"]
+
+    def test_scheduled_trip_starts(self, berlin, day):
+        from dystonse_gtfs_importer_spark.plans.scheduled import (
+            WEEKDAY_COLS, scheduled_trip_starts,
+        )
+
+        d = dt.date.fromisoformat(day)
+        trips = berlin.createDataFrame(
+            [("T", "R", 1, "svc")],
+            "trip_id string, route_id string, route_variant long, "
+            "service_id string")
+        stop_times = berlin.createDataFrame(
+            [("T", 1, EIGHT_AM), ("T", 2, EIGHT_AM + 600)],
+            "trip_id string, stop_sequence int, departure_secs int")
+        ymd = d.strftime("%Y%m%d")
+        calendar = berlin.createDataFrame(
+            [("svc", *[True] * 7, ymd, ymd)],
+            "service_id string, "
+            + ", ".join(f"{c} boolean" for c in WEEKDAY_COLS)
+            + ", start_date string, end_date string")
+        starts = scheduled_trip_starts(
+            berlin, trips, stop_times, calendar,
+            dt.datetime.combine(d, dt.time()) - dt.timedelta(days=1),
+            dt.datetime.combine(d, dt.time()) + dt.timedelta(days=1))
+        assert _strings(starts, "start_ts") == [f"{day} 08:00:00"]
+
+    def test_realtime_basis_cutoff(self, berlin, day):
+        from dystonse_gtfs_importer_spark.plans.predict import realtime_basis
+
+        records = berlin.createDataFrame(
+            [("R", 1, "T", dt.date.fromisoformat(day), EIGHT_AM, 1, "S",
+              dt.datetime(2024, 1, 1), 0, 0)],
+            "route_id string, route_variant long, trip_id string, "
+            "trip_start_date date, trip_start_time int, stop_sequence int, "
+            "stop_id string, time_of_recording timestamp, "
+            "delay_arrival int, delay_departure int")
+        vstops = berlin.createDataFrame(
+            [("R", 1, "S", 0, EIGHT_AM)],
+            "route_id string, route_variant long, stop_id string, "
+            "stop_index int, departure_secs int")
+        # the 08:00 departure is past only once 08:00 has passed
+        assert realtime_basis(records, vstops,
+                              _wall(day, "08:00:00")).count() == 0
+        assert realtime_basis(records, vstops,
+                              _wall(day, "08:00:01")).count() == 1
+
+    def _predictions(self, spark, day):
+        """One schedule-origin prediction row of an 08:00:00 trip."""
+        from dystonse_gtfs_importer_spark.schemas import ORIGIN_SCHEDULE
+
+        return spark.createDataFrame(
+            [("src", ORIGIN_SCHEDULE, "old", dt.date.fromisoformat(day), EIGHT_AM)],
+            "source string, origin_type tinyint, schedule_file_name string, "
+            "trip_start_date date, trip_start_time int")
+
+    def test_cleanup_predictions(self, berlin, day):
+        from dystonse_gtfs_importer_spark.streaming.import_stream import (
+            cleanup_predictions,
+        )
+
+        preds = self._predictions(berlin, day)
+        # kept while the trip started at most 12 h before now
+        assert cleanup_predictions(preds, _wall(day, "20:00:00")).count() == 1
+        assert cleanup_predictions(preds, _wall(day, "20:00:01")).count() == 0
+
+    def test_remove_outdated_predictions(self, berlin, day):
+        from dystonse_gtfs_importer_spark.streaming.import_stream import (
+            remove_outdated_predictions,
+        )
+
+        preds = self._predictions(berlin, day)
+        # removed only when the trip starts before the window end
+        kept = remove_outdated_predictions(preds, "src", "new",
+                                           _wall(day, "08:00:00"))
+        gone = remove_outdated_predictions(preds, "src", "new",
+                                           _wall(day, "08:00:01"))
+        assert (kept.count(), gone.count()) == (1, 0)
+
+
+def test_only_sql_shared_derives_schedule_instants():
+    """One time rule: no package module but functions/sql_shared.py
+    spells out the noon offset or a midnight trip-start anchor."""
+    pkg = Path(S.__file__).resolve().parents[1]
+    own = Path(S.__file__).resolve()
+    offenders = [
+        str(p.relative_to(pkg)) for p in sorted(pkg.rglob("*.py"))
+        if p.resolve() != own
+        and any(m in p.read_text(encoding="utf-8")
+                for m in ("43200", 'to_timestamp("trip_start_date")'))]
+    assert offenders == []
 
 
 TEXTS = [
