@@ -41,8 +41,6 @@ from ..functions import sql_shared as S
 from ..functions.curve_udfs import curve_x_at_y_expr, interp_curve_set_expr
 from ..schemas import CURVE_TYPE
 
-_CS_TYPE = "array<struct<focus:float,curve:array<struct<x:float,y:float>>>>"
-
 
 @pandas_udf(CURVE_TYPE)
 def _interp_curve_set(curve_sets: pd.Series, xs: pd.Series) -> pd.Series:
